@@ -1,22 +1,21 @@
 """Excel ingest path (S1–S4, S13): xlsx_lite round-trip, discover →
-sniff → read end-to-end on generated fixtures, tiered parallel read,
+sniff → read end-to-end on generated fixtures, tiered executor read,
 and input archival."""
 
 from __future__ import annotations
 
-import threading
+import zipfile
 
-import pytest
-
+from train_reports_etl_spark.plans.report_pipelines import ReportResult
+from train_reports_etl_spark.plans.run_summary import run_reports
 from train_reports_etl_spark.plans.schemas import HEADERS, TRAIN_LIST_HEADER
 from train_reports_etl_spark.sinks.archival import archive_inputs
-from train_reports_etl_spark.sources import xlsx_lite
+from train_reports_etl_spark.sources import report_reader, xlsx_lite
 from train_reports_etl_spark.sources.report_reader import (
     MIN_ROWS_PER_TASK,
     SheetRef,
     discover_reports,
     read_report,
-    read_sheet_as_strings,
     tier_plan,
 )
 from train_reports_etl_spark.sources.sniffer import SniffResult
@@ -75,56 +74,28 @@ def test_discover_sniff_read_end_to_end(spark, tmp_path):
     assert tickets == ["T0000", "T0001", "T0002"]
 
 
-def test_read_sheet_tiered_matches_sequential(spark, tmp_path):
-    # enough rows that tier_plan(min_rows_per_task=10) makes >1 tier
-    rows = [["junk"], list(TRAIN_LIST_HEADER)] + [
-        [f"v{i}"] + [""] * (len(TRAIN_LIST_HEADER) - 1) for i in range(50)
-    ]
-    path = xlsx_lite.write_xlsx(str(tmp_path / "big.xlsx"), {"TL": rows})
-    ref = SheetRef(path, "TL", SniffResult("train_list", 1))
-    df = read_sheet_as_strings(spark, ref, max_workers=4)
-    vals = sorted(r[0] for r in df.select("Departure Date").collect())
-    assert vals == sorted(f"v{i}" for i in range(50))
-    assert df.count() == 50
-
-
 def test_tier_plan_reference_constants():
     # below the 3000-row floor: a single tier
-    assert tier_plan(2, 100) == [(2, 100)]
-    # 9000 rows, 3 workers: three 3000-row tiers, exact disjoint cover
-    tiers = tier_plan(1, 9000, max_workers=3)
+    assert tier_plan(2, 100, 4) == [(2, 100)]
+    # 9000 rows, 3 tiers max: three 3000-row tiers, exact disjoint cover
+    tiers = tier_plan(1, 9000, 3)
     assert tiers == [(1, 3000), (3001, 6000), (6001, 9000)]
-    # worker cap binds before the row floor on huge inputs
-    tiers = tier_plan(1, 10 * MIN_ROWS_PER_TASK, max_workers=4)
+    # the tier cap binds before the row floor on huge inputs
+    tiers = tier_plan(1, 10 * MIN_ROWS_PER_TASK, 4)
     assert len(tiers) == 4
     # any plan covers the range exactly, in order, without overlap
     flat = [r for t in tiers for r in range(t[0], t[1] + 1)]
     assert flat == list(range(1, 10 * MIN_ROWS_PER_TASK + 1))
-    assert tier_plan(5, 4) == []
+    assert tier_plan(5, 4, 4) == []
 
 
-def test_read_report_reads_sheets_concurrently(spark):
-    """S4 probe: two reader calls must be in flight at once — a
-    2-party barrier deadlocks (and times out) under sequential reads."""
-    barrier = threading.Barrier(2, timeout=10)
-
-    def reader(ref):
-        barrier.wait()
-        return spark.createDataFrame([(ref.sheet,)], ["s"])
-
-    refs = [SheetRef("f", s, SniffResult("train_list", 0)) for s in ("a", "b")]
-    out = read_report(spark, refs, reader=reader)
-    assert sorted(r.s for r in out.collect()) == ["a", "b"]
-
-
-def test_distributed_read_matches_driver_path(spark, tmp_path):
-    """S4 executor path: `read_report_distributed` (tiers as RDD tasks
-    via parallelize().flatMap) must produce the IDENTICAL frame as the
-    driver-thread path on a multi-file, multi-sheet fixture with mixed
-    headers, NULL gaps, and enough rows for multiple tiers per sheet."""
-    from train_reports_etl_spark.sources.report_reader import read_report_distributed
-
+def test_distributed_read_matches_written_rows(spark, tmp_path, monkeypatch):
+    """S4: every (file, sheet, row-tier) is one RDD task; the frame
+    holds exactly the rows the fixture wrote, on a multi-file,
+    multi-sheet fixture with NULL gaps and several tiers per sheet."""
+    monkeypatch.setattr(report_reader, "MIN_ROWS_PER_TASK", 8)
     width = len(TRAIN_LIST_HEADER)
+    written = []
 
     def sheet_rows(tag, n):
         data = []
@@ -132,37 +103,29 @@ def test_distributed_read_matches_driver_path(spark, tmp_path):
             row = [f"{tag}{i}"] + [""] * (width - 1)
             row[2] = None  # NULL gap must survive the round trip
             data.append(row)
+        written.extend(tuple(r) for r in data)
         return [["junk title"], list(TRAIN_LIST_HEADER)] + data
 
-    p1 = xlsx_lite.write_xlsx(
+    xlsx_lite.write_xlsx(
         str(tmp_path / "a.xlsx"), {"S1": sheet_rows("a", 40), "S2": sheet_rows("b", 25)}
     )
-    p2 = xlsx_lite.write_xlsx(str(tmp_path / "b.xlsx"), {"S1": sheet_rows("c", 10)})
-    refs = [
-        SheetRef(p1, "S1", SniffResult("train_list", 1)),
-        SheetRef(p1, "S2", SniffResult("train_list", 1)),
-        SheetRef(p2, "S1", SniffResult("train_list", 1)),
-    ]
-    # small min_rows_per_task so every sheet splits into several tiers
-    dist = read_report_distributed(spark, refs, min_rows_per_task=8)
-    drv = read_report(spark, refs, distributed=False)
-    assert dist.columns == drv.columns == list(TRAIN_LIST_HEADER)
-    assert dist.count() == 75
-    assert dist.exceptAll(drv).count() == 0
-    assert drv.exceptAll(dist).count() == 0
-    # the executor path really fans out: one RDD partition per tier
-    assert dist.rdd.getNumPartitions() >= 6
+    xlsx_lite.write_xlsx(str(tmp_path / "b.xlsx"), {"S1": sheet_rows("c", 10)})
+    refs = discover_reports(str(tmp_path))["train_list"]
+    assert [(r.sheet, r.sniff.header_row) for r in refs] == [("S1", 1), ("S2", 1), ("S1", 1)]
 
-    # auto dispatch: multi-sheet refs take the executor path and agree
-    auto = read_report(spark, refs)
-    assert auto.exceptAll(drv).count() == 0 and auto.count() == 75
+    df = read_report(spark, refs)
+    assert df.columns == list(TRAIN_LIST_HEADER)
+    assert sorted(tuple(r) for r in df.collect()) == sorted(written)
+    # the read really fans out: at least one RDD partition per tier
+    parallelism = spark.sparkContext.defaultParallelism
+    n_tiers = sum(len(tier_plan(3, 2 + n, parallelism)) for n in (40, 25, 10))
+    assert df.rdd.getNumPartitions() >= n_tiers > len(refs)
 
 
-def test_distributed_read_mixed_headers_union_by_name(spark, tmp_path):
+def test_distributed_read_mixed_headers_union_by_name(spark, tmp_path, monkeypatch):
     """Sheets with different sniffed headers group into separate RDD
-    jobs and union by name, matching the driver path's semantics."""
-    from train_reports_etl_spark.sources.report_reader import read_report_distributed
-
+    jobs and union by name."""
+    monkeypatch.setattr(report_reader, "MIN_ROWS_PER_TASK", 2)
     h1 = ["x", "y"]
     h2 = ["y", "x"]  # same names, different order → by-name union
     p = xlsx_lite.write_xlsx(
@@ -173,16 +136,82 @@ def test_distributed_read_mixed_headers_union_by_name(spark, tmp_path):
         },
     )
     refs = [
-        SheetRef(p, "A", SniffResult("t", 0)),
-        SheetRef(p, "B", SniffResult("t", 0)),
+        SheetRef(p, "A", SniffResult("t", 0, tuple(h1))),
+        SheetRef(p, "B", SniffResult("t", 0, tuple(h2))),
     ]
-    dist = read_report_distributed(spark, refs, min_rows_per_task=2)
-    drv = read_report(spark, refs, distributed=False)
-    assert sorted(dist.columns) == ["x", "y"]
-    assert dist.exceptAll(drv).count() == 0
-    assert drv.exceptAll(dist).count() == 0
-    rows = {(r["x"], r["y"]) for r in dist.collect()}
-    assert ("bx2", "by2") in rows and ("ax0", "ay0") in rows
+    df = read_report(spark, refs)
+    assert sorted(df.columns) == ["x", "y"]
+    rows = sorted((r["x"], r["y"]) for r in df.collect())
+    want = [(f"ax{i}", f"ay{i}") for i in range(5)] + [(f"bx{i}", f"by{i}") for i in range(4)]
+    assert rows == sorted(want)
+
+
+def test_header_none_cell_reads_as_unnamed(spark, tmp_path):
+    """A blank header cell still sniffs (None drops out of the match)
+    and names its column ``Unnamed: <i>`` from the sniffed header."""
+    header = [TRAIN_LIST_HEADER[0], None, *TRAIN_LIST_HEADER[1:]]
+    data = [f"v{i}" for i in range(len(header))]
+    xlsx_lite.write_xlsx(str(tmp_path / "gap.xlsx"), {"TL": [header, data]})
+    [ref] = discover_reports(str(tmp_path))["train_list"]
+    columns = [TRAIN_LIST_HEADER[0], "Unnamed: 1", *TRAIN_LIST_HEADER[1:]]
+    assert list(ref.sniff.header) == columns
+
+    df = read_report(spark, [ref])
+    assert df.columns == columns
+    assert [tuple(r) for r in df.collect()] == [tuple(data)]
+
+
+def _truncate_part(path: str, part: str) -> None:
+    """Rewrite the workbook with ``part`` cut to half its bytes."""
+    with zipfile.ZipFile(path) as zf:
+        parts = {name: zf.read(name) for name in zf.namelist()}
+    parts[part] = parts[part][: len(parts[part]) // 2]
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, blob in parts.items():
+            zf.writestr(name, blob)
+
+
+def test_bad_sheet_skips_only_that_sheet(tmp_path):
+    """Per-sheet isolation: a sheet whose XML is truncated is reported
+    as ``path#sheet`` and the later sheets of its workbook still sniff;
+    an unreadable workbook stays one file-level event."""
+    book = xlsx_lite.write_xlsx(
+        str(tmp_path / "book.xlsx"),
+        {"S1": _tl_fixture_rows(1), "S2": _tl_fixture_rows(1), "S3": _tl_fixture_rows(1)},
+    )
+    _truncate_part(book, "xl/worksheets/sheet2.xml")
+    (tmp_path / "corrupt.xlsx").write_bytes(b"not a zip archive")
+
+    errors = []
+    found = discover_reports(str(tmp_path), on_error=lambda unit, exc: errors.append(unit))
+    assert [r.sheet for r in found["train_list"]] == ["S1", "S3"]
+    assert errors == [f"{book}#S2", str(tmp_path / "corrupt.xlsx")]
+
+
+def test_run_reports_reads_each_sheet_once_on_the_driver(spark, tmp_path, monkeypatch):
+    """The sniff is the only driver-side row read: no header re-probe,
+    and the data rows are read by executor tasks."""
+    for f in range(2):
+        xlsx_lite.write_xlsx(
+            str(tmp_path / f"tl{f}.xlsx"), {"A": _tl_fixture_rows(3), "B": _tl_fixture_rows(2)}
+        )
+    calls = []
+    iter_rows = xlsx_lite.iter_rows
+
+    def counting(path, sheet, *args, **kwargs):
+        calls.append((path, sheet))
+        return iter_rows(path, sheet, *args, **kwargs)
+
+    monkeypatch.setattr(xlsx_lite, "iter_rows", counting)
+
+    def pipeline(raw):
+        assert raw.count() == 10
+        empty = raw.limit(0)
+        return ReportResult(cleaned=raw, error_rows=empty, duplicates=empty)
+
+    summary = run_reports(spark, str(tmp_path), pipelines={"train_list": pipeline})
+    assert not summary.errors_found
+    assert len(calls) == 4 and len(set(calls)) == 4
 
 
 def test_archive_inputs_moves_and_overwrites(tmp_path):

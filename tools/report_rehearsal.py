@@ -4,10 +4,7 @@ three report types — run end-to-end as one `plans/run_summary.run_reports`
 orchestration: discover → sniff → read (tiered, executor-side) →
 clean → derive → dedup → quarantine → idempotent partitioned load →
 audit, twice (the second run pins S11 idempotency), with per-stage
-walls, planted-defect count assertions, and measured evidence that
-sheet reads parallelize across executor tasks (S4, the capability the
-reference advertises at `Old/reports_exporter_v0.82.ipynb:484-554` and
-`README.md:22`).
+walls and planted-defect count assertions.
 
 The generator is DETERMINISTIC and counts every defect it plants, so
 the assertions are exact equalities, not smoke checks:
@@ -355,34 +352,6 @@ def run_once(spark, src: str, out_root: str, walls: dict, counts: dict):
     return summary
 
 
-def s4_evidence(spark, src: str) -> dict:
-    """Measured sheet-read parallelism: the same 12-sheet subset read
-    (a) as executor row-tier tasks and (b) serially on one driver
-    thread. The ratio is the S4 claim, measured."""
-    from train_reports_etl_spark.sources.report_reader import (
-        discover_reports,
-        read_report,
-        read_report_distributed,
-    )
-
-    refs = discover_reports(src, on_error=lambda p, e: None)["train_list"][:12]
-    t0 = time.time()
-    n_dist = read_report_distributed(spark, refs).count()
-    wall_dist = round(time.time() - t0, 2)
-    t0 = time.time()
-    n_serial = read_report(spark, refs, max_workers=1).count()
-    wall_serial = round(time.time() - t0, 2)
-    return {
-        "n_sheets": len(refs),
-        "rows": n_dist,
-        "rows_serial_path": n_serial,
-        "wall_distributed": wall_dist,
-        "wall_serial_1_thread": wall_serial,
-        "speedup": round(wall_serial / wall_dist, 2) if wall_dist > 0 else -1.0,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-    }
-
-
 def main() -> int:
     argv = sys.argv[1:]
     work = "/tmp/report_rehearsal"
@@ -502,22 +471,12 @@ def main() -> int:
     check(n_audit2 == 2 * n_audit,
           f"audit table must append (2 runs): {n_audit2} != {2 * n_audit}")
 
-    # S4 measured parallelism
-    s4 = s4_evidence(spark, layout["src"])
-    print(f"S4: {s4['n_sheets']} sheets, distributed {s4['wall_distributed']}s "
-          f"vs 1-thread {s4['wall_serial_1_thread']}s -> {s4['speedup']}x")
-    check(s4["rows"] == s4["rows_serial_path"],
-          "distributed and serial reads disagree on row count")
-    check(s4["speedup"] > 1.5,
-          f"sheet reads did not parallelize: {s4['speedup']}x")
-
     result = {
         "layout": layout,
         "expected": {k: v for k, v in expected.items() if k != "copy2_tickets"}
         | {"n_copy2": len(expected["copy2_tickets"])},
         "counts": counts,
         "walls": walls,
-        "s4_parallel_read": s4,
         "total_wall": round(sum(walls.values()), 2),
         "failures": failures,
     }

@@ -157,7 +157,7 @@ def e4_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_sql() -> str:
-    """Mirror of ``lang_scores`` + ``argmax_lang``: counts in a CTE
+    """Mirror of ``lang_count_table`` + ``argmax_lang``: counts in a CTE
     (each computed once), flat GREATEST+CASE argmax, alphabetical
     tie-break, 'und' floor."""
     ordered = sorted(LANG_MARKERS)

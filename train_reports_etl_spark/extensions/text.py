@@ -125,11 +125,6 @@ def shingle_posting(
     return posting
 
 
-def count_occurrences(text: Column | str, word: str) -> Column:
-    """Whole-word occurrence count of ``word`` in lowercased text."""
-    return F.size(F.filter(tokens(text), lambda t: t == F.lit(word))).cast("int")
-
-
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """E4 — quality-scoring columns: lengths, token stats, punctuation
     and stopword ratios, and a composite keep-score in [0,1].
@@ -166,20 +161,6 @@ def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Marker-token count per candidate language (one column each).
-
-    Column-level convenience; tokenizes once per marker word (each
-    ``count_occurrences`` re-runs ``regexp_extract_all`` in an
-    interpreted HOF). For table-scale scoring use
-    :func:`lang_count_table` — one tokenization per row, codegen agg.
-    """
-    return {
-        lang: sum((count_occurrences(text, w) for w in words), F.lit(0))
-        for lang, words in LANG_MARKERS.items()
-    }
-
-
 def lang_count_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -190,11 +171,11 @@ def lang_count_table(
     ONCE per row, explode, and count every language's markers in one
     codegen hash-agg pass (the :func:`simhash_table` shape).
 
-    Prefer this over per-word :func:`count_occurrences` columns, which
-    re-run the tokenizer regex once per marker (15×/row here) inside
-    interpreted ``F.filter`` HOFs. Map-side partial aggregation means
-    the shuffle carries one small count row per document. Documents
-    with no tokens survive via ``explode_outer`` with all-zero counts.
+    Per-word count columns would re-run the tokenizer regex once per
+    marker (15×/row here) inside interpreted ``F.filter`` HOFs.
+    Map-side partial aggregation means the shuffle carries one small
+    count row per document. Documents with no tokens survive via
+    ``explode_outer`` with all-zero counts.
 
     Returns (id_col, *keep_cols, c_<lang>... int) — one row per doc.
     """
@@ -316,13 +297,6 @@ def argmax_lang(count_cols: dict[str, Column]) -> Column:
     for lang in reversed(langs):
         out = F.when(count_cols[lang] == mx, F.lit(lang)).otherwise(out)
     return F.when(mx > 0, out).otherwise(F.lit("und"))
-
-
-def predict_lang(text: Column | str) -> Column:
-    """E4 — heuristic language ID over raw text. Prefer the two-stage
-    form (``lang_scores`` columns → ``argmax_lang``) in queries so each
-    count is computed once per row."""
-    return argmax_lang(lang_scores(text))
 
 
 def normalize_for_fingerprint(text: Column | str) -> Column:

@@ -43,8 +43,3 @@ def consecutive_date_ranges(df: DataFrame, date_col: Column | str) -> DataFrame:
         .orderBy("range_start")
     )
 
-
-def is_non_consecutive(df: DataFrame, date_col: Column | str) -> bool:
-    """Warning predicate (`reports_exporter_v0.83.py:1321-1325`):
-    True iff the distinct dates form more than one island."""
-    return consecutive_date_ranges(df, date_col).limit(2).count() > 1

@@ -75,13 +75,6 @@ def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> Dat
     return left.join(right, on=list(on) if not isinstance(on, str) else on, how="left_semi")
 
 
-def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Complement of :func:`semi_join` — the reference expresses this
-    only as predicate complements (P2), but it is the natural quarantine
-    primitive, so it is first-class here."""
-    return left.join(right, on=list(on) if not isinstance(on, str) else on, how="left_anti")
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

@@ -95,7 +95,6 @@ def run_reports(
     directory: str,
     pipelines: dict[str, Callable[[DataFrame], ReportResult]],
     exporter: Callable[[str, ReportResult], None] | None = None,
-    max_workers: int | None = None,
 ) -> RunSummary:
     """Discover → read → pipeline → (optionally) export every report in
     ``directory``, aggregating per-stage failures instead of aborting
@@ -103,20 +102,18 @@ def run_reports(
     each report's read and export is its own try/except; the run always
     reaches the end-of-run summary).
 
-    A failed sheet read skips only that sheet (remaining sheets of the
-    report still union — the reference's per-file error handling,
-    `:1652-1687`); a failed pipeline or export skips only that report.
+    A sheet that fails its sniff skips only that sheet (remaining sheets
+    of the report still union — the reference's per-file error
+    handling, `:1652-1687`); a failed data read, pipeline or export
+    skips only that report.
     """
-    from train_reports_etl_spark.sources.report_reader import (
-        _engine_rows,
-        discover_reports,
-        read_report,
-    )
+    from train_reports_etl_spark.sources.report_reader import discover_reports, read_report
 
     summary = RunSummary()
     try:
-        # Per-FILE isolation (reference `:1652-1687`): a corrupt
-        # workbook becomes one read-failure event; the run continues.
+        # Per-file and per-sheet isolation (reference `:1652-1687`): a
+        # corrupt workbook or sheet becomes one read-failure event; the
+        # run continues.
         found = discover_reports(
             directory,
             on_error=lambda path, exc: summary.record("*", "read", path, exc),
@@ -126,29 +123,8 @@ def run_reports(
         return summary
 
     for report, refs in found.items():
-        good_refs = []
         for ref in refs:
-            unit = f"{ref.path}#{ref.sheet}"
-            try:
-                # Header-row probe: attributes a corrupt sheet to
-                # itself without re-parsing its data rows (the full
-                # read below happens exactly once per sheet). A sheet
-                # whose data rows fail later is attributed to the
-                # report-level read — acceptable granularity. The
-                # generator is closed explicitly so the workbook file
-                # handle is released now, not at garbage collection.
-                hdr = ref.sniff.header_row + 1
-                gen = iter(_engine_rows(ref.path, ref.sheet, hdr, hdr))
-                try:
-                    next(gen, None)
-                finally:
-                    gen.close()
-                good_refs.append(ref)
-                summary.record(report, "read", unit)
-            except Exception as exc:  # noqa: BLE001
-                summary.record(report, "read", unit, exc)
-        if not good_refs:
-            continue
+            summary.record(report, "read", f"{ref.path}#{ref.sheet}")
         pipeline = pipelines.get(report)
         if pipeline is None:
             # Reference: "Exportation ... not implemented yet" warning
@@ -159,7 +135,7 @@ def run_reports(
             )
             continue
         try:
-            raw = read_report(spark, good_refs, max_workers=max_workers)
+            raw = read_report(spark, refs)
             result = pipeline(raw)
             summary.results[report] = result
             summary.record(report, "pipeline", report)

@@ -1,78 +1,21 @@
-"""Relational-database sinks (S5/S6/S9/S10): JDBC reads/writes and a
-psycopg2 COPY fast path.
+"""Relational-database sinks (S9): a psycopg2 COPY fast path with the
+reference's constraint drop/recreate lifecycle.
 
 No database exists in this container, so everything here is
 connection-late: plans are built and validated, the socket is only
 touched inside the executor-side functions. Gated imports keep the
 module importable without drivers installed.
 
-Scale notes:
-- ``read_jdbc`` with ``partitionColumn/lowerBound/upperBound`` splits
-  the source query into N range-parallel reads (the distributed
-  replacement for the reference's single-socket ``pd.read_sql_table``,
-  `reports_exporter_v0.83.py:613-618`).
-- ``copy_into_postgres`` mirrors the reference's COPY-from-CSV-buffer
-  bulk load (`:1357-1372`) but per *partition*, so N executors stream
-  concurrently; batch inserts via plain ``write.jdbc(batchsize=...)``
-  are the portable fallback (the reference's superseded S10 path).
+Scale note: ``copy_into_postgres`` mirrors the reference's
+COPY-from-CSV-buffer bulk load (`reports_exporter_v0.83.py:1357-1372`)
+but per *partition*, so N executors stream concurrently.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-) -> DataFrame:
-    """S5 — JDBC table read; pass ``partition_column`` + bounds for
-    range-parallel scans (one connection per partition)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    return reader.load()
-
-
-def read_jdbc_query(spark: SparkSession, url: str, query: str, properties: dict[str, str] | None = None) -> DataFrame:
-    """S6 — pushdown query read (the aggregate runs in the database,
-    as the reference ships its GROUP BY to Postgres, `:686-696`)."""
-    reader = spark.read.format("jdbc").option("url", url).option("query", query)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def write_jdbc_append(
-    df: DataFrame, url: str, table: str, batchsize: int = 500, properties: dict[str, str] | None = None
-) -> None:
-    """S10 — portable batched-insert sink (the reference's historical
-    500-row chunk path, `Old/reports_exporter_v0.2.py:674`)."""
-    writer = (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .mode("append")
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.save()
+from pyspark.sql import DataFrame
 
 
 def quote_ident(name: str) -> str:

@@ -18,7 +18,7 @@ downstream date filter; each load day writes only its partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from train_reports_etl_spark.operators.islands import consecutive_date_ranges
 
@@ -73,6 +73,3 @@ def load_report(
     idempotent_overwrite(df, path, partition_cols or [date_col])
     return ranges
 
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

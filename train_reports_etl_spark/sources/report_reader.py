@@ -10,15 +10,11 @@ cluster); the scalable pattern used here is:
 - the *(file, sheet, row-tier)* triple is the parallel unit, tiered
   exactly like the reference's parallel reader
   (`Old/reports_exporter_v0.82.ipynb:484-554`: ≥3000 rows per task),
-  so one big sheet and many small sheets both saturate the I/O path.
-  Tiers run as EXECUTOR tasks by default
-  (:func:`read_report_distributed` — ``parallelize(tasks).flatMap``),
-  falling back to driver threads only for single small sheets where a
-  Spark job isn't worth scheduling;
+  and every tier is one executor task (``parallelize(tasks).flatMap``),
+  so one big sheet and many small sheets both spread over the
+  cluster's slots;
 - each sheet becomes an all-string DataFrame with the exact sniffed
-  header, feeding the same pipeline as any other source;
-- for tests and bulk data the same entry points accept CSV/parquet,
-  where Spark's native splittable readers take over.
+  header, feeding the same pipeline as any other source.
 
 Engine selection: openpyxl when installed, else the pure-stdlib
 ``xlsx_lite`` fallback (same public xlsx format), so the full
@@ -29,9 +25,9 @@ from __future__ import annotations
 
 import math
 import os
-from collections.abc import Callable, Iterable, Iterator
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -47,13 +43,9 @@ try:  # optional accelerated engine; absent in this container
 except ImportError:
     HAVE_OPENPYXL = False
 
-# Reference parallel-read tuning constants
-# (`Old/reports_exporter_v0.82.ipynb:486,491`).
+# Reference parallel-read tuning constant
+# (`Old/reports_exporter_v0.82.ipynb:486`).
 MIN_ROWS_PER_TASK = 3000
-
-
-def _max_workers() -> int:
-    return max(1, (os.cpu_count() or 2) - 1)
 
 
 @dataclass(frozen=True)
@@ -110,17 +102,6 @@ def _sheet_max_row(path: str, sheet: str) -> int:
     return xlsx_lite.sheet_max_row(path, sheet)
 
 
-def _iter_sheets(path: str) -> Iterable[tuple[str, list[list]]]:
-    """Yield (sheet_name, first PROBE_DEPTH rows) per sheet."""
-    for name in _sheet_names(path):
-        rows = []
-        for i, row in enumerate(_engine_rows(path, name, 1, PROBE_DEPTH)):
-            if i >= PROBE_DEPTH:
-                break
-            rows.append(list(row))
-        yield name, rows
-
-
 def discover_reports(
     directory: str,
     on_error: Callable[[str, Exception], None] | None = None,
@@ -128,211 +109,97 @@ def discover_reports(
     """S1+S2 — sniff every sheet of every file; group by report type
     (`reports_exporter_v0.83.py:1690-1724`). Unknown sheets are skipped.
 
-    ``on_error``: per-FILE failure isolation, matching the reference's
-    per-file try/except (`:1652-1687`) — a corrupt workbook is reported
-    via the callback and the remaining files still discover. Without a
-    callback the exception propagates (a caller that didn't opt into
+    ``on_error``: failure isolation, matching the reference's per-file
+    try/except (`:1652-1687`) — a workbook whose sheets cannot be
+    listed is reported as its path, a sheet that cannot be sniffed as
+    ``path#sheet``, and discovery goes on with the next sheet. Without
+    a callback the exception propagates (a caller that didn't opt into
     isolation must not silently lose files).
     """
+
+    def failed(unit: str, exc: Exception) -> None:
+        if on_error is None:
+            raise exc
+        on_error(unit, exc)
+
     found: dict[str, list[SheetRef]] = {}
     for path in discover_files(directory):
         try:
-            for sheet, rows in _iter_sheets(path):
-                res = sniff_rows(rows)
-                if res is not None:
-                    found.setdefault(res.report_type, []).append(
-                        SheetRef(path, sheet, res)
-                    )
+            sheets = _sheet_names(path)
         except Exception as exc:  # noqa: BLE001 — one bad workbook
-            if on_error is None:
-                raise
-            on_error(path, exc)
+            failed(path, exc)
+            continue
+        for sheet in sheets:
+            try:
+                res = sniff_rows([list(r) for r in _engine_rows(path, sheet, 1, PROBE_DEPTH)])
+            except Exception as exc:  # noqa: BLE001 — one bad sheet
+                failed(f"{path}#{sheet}", exc)
+                continue
+            if res is not None:
+                found.setdefault(res.report_type, []).append(SheetRef(path, sheet, res))
     return found
 
 
-def tier_plan(
-    first_row: int,
-    max_row: int,
-    min_rows_per_task: int = MIN_ROWS_PER_TASK,
-    max_workers: int | None = None,
-) -> list[tuple[int, int]]:
-    """S4 — split [first_row, max_row] into ≤ ``cpu_count()-1`` tiers
-    of ≥ ``min_rows_per_task`` rows, the reference's sizing rule
+def tier_plan(first_row: int, max_row: int, max_tiers: int) -> list[tuple[int, int]]:
+    """S4 — split [first_row, max_row] into ≤ ``max_tiers`` tiers of
+    ≥ ``MIN_ROWS_PER_TASK`` rows, the reference's sizing rule
     (`Old/reports_exporter_v0.82.ipynb:486-510`)."""
     total = max_row - first_row + 1
     if total <= 0:
         return []
-    n = max(1, min(max_workers or _max_workers(), math.ceil(total / min_rows_per_task)))
+    n = max(1, min(max_tiers, math.ceil(total / MIN_ROWS_PER_TASK)))
     tier = math.ceil(total / n)
     return [(s, min(s + tier - 1, max_row)) for s in range(first_row, max_row + 1, tier)]
 
 
-def _sheet_header(ref: SheetRef) -> list[str]:
-    """The sniffed header row as column names (1-row probe read)."""
-    header_file_row = ref.sniff.header_row + 1  # sniff index is 0-based
-    cells = next(iter(_engine_rows(ref.path, ref.sheet, header_file_row, header_file_row)), [])
-    return [str(c) if c is not None else f"Unnamed: {i}" for i, c in enumerate(cells)]
+def _read_task(task: tuple[str, str, int, int], width: int) -> list[list]:
+    """Executor side: one row tier, every value stringified (dtype=str
+    parity, `reports_exporter_v0.83.py:522-528`) and padded or cut to
+    the header width."""
+    path, sheet, lo, hi = task
+    out = []
+    for row in _engine_rows(path, sheet, lo, hi):
+        vals = [None if c is None else str(c) for c in row[:width]]
+        vals.extend([None] * (width - len(vals)))
+        out.append(vals)
+    return out
 
 
-def read_sheet_as_strings(
-    spark: SparkSession,
-    ref: SheetRef,
-    max_workers: int | None = None,
-    max_row: int | None = None,
-) -> DataFrame:
-    """S3+S4 — typed all-string read of one sniffed sheet: header from
-    the sniffed row, every value stringified (dtype=str parity,
-    `reports_exporter_v0.83.py:522-528`), data rows read as parallel
-    row tiers. Downstream coercion is the pipelines' job (F1/F2).
-    ``max_row``: pre-probed sheet size (a footer probe can degrade to a
-    row scan on dimension-less files — don't pay it twice)."""
-    header_file_row = ref.sniff.header_row + 1  # sniff index is 0-based
-    header = _sheet_header(ref)
-    width = len(header)
+def read_report(spark: SparkSession, refs: list[SheetRef]) -> DataFrame:
+    """S3+S4/U1 — typed all-string read of all sheets of one report
+    type, unioned by name: the cluster form of the reference's
+    advertised parallel read (`README.md:22`,
+    `Old/reports_exporter_v0.82.ipynb:484-554`). Every (file, sheet,
+    row-tier) task is one element of an RDD, so tiers run wherever the
+    cluster has slots. Requires the files on storage every executor can
+    reach (shared FS / object store — in local mode, trivially true).
 
-    def read_tier(bounds: tuple[int, int]) -> list[list]:
-        out = []
-        for row in _engine_rows(ref.path, ref.sheet, bounds[0], bounds[1]):
-            vals = [None if c is None else str(c) for c in row[:width]]
-            vals.extend([None] * (width - len(vals)))
-            out.append(vals)
-        return out
-
-    if max_row is None:
-        max_row = _sheet_max_row(ref.path, ref.sheet)
-    tiers = tier_plan(header_file_row + 1, max_row, max_workers=max_workers)
-    if len(tiers) <= 1:
-        chunks = [read_tier(t) for t in tiers]
-    else:
-        with ThreadPoolExecutor(max_workers=min(len(tiers), max_workers or _max_workers())) as ex:
-            chunks = list(ex.map(read_tier, tiers))
-
-    schema = StructType([StructField(name, StringType(), True) for name in header])
-    return spark.createDataFrame([row for chunk in chunks for row in chunk], schema=schema)
-
-
-def read_report_distributed(
-    spark: SparkSession,
-    refs: list[SheetRef],
-    min_rows_per_task: int = MIN_ROWS_PER_TASK,
-    max_rows: dict[SheetRef, int] | None = None,
-) -> DataFrame:
-    """S4 on EXECUTORS — the cluster form of the reference's advertised
-    parallel read (`README.md:22`, `Old/reports_exporter_v0.82.ipynb:
-    484-554`): every (file, sheet, row-tier) task of a report type is
-    one element of an RDD, so tiers run wherever the cluster has slots
-    instead of on driver threads. Requires the files on storage every
-    executor can reach (shared FS / object store — in local mode,
-    trivially true).
-
-    Driver-side work is metadata-only: a 1-row header probe and a
-    max-row footer probe per sheet. Sheets whose sniffed headers are
-    identical share one RDD job (their tiers interleave freely); header
-    variants become separate frames unioned by name, exactly like the
-    driver path.
-
-    ``max_rows``: pre-probed sheet sizes keyed by ref (pass when the
-    caller already footer-probed, as :func:`read_report`'s dispatch
-    does — ``sheet_max_row`` without a ``<dimension>`` element degrades
-    to a row scan, so probing twice is real I/O)."""
-    max_rows = max_rows or {}
+    Driver-side work is metadata-only: the header comes from the sniff,
+    and each sheet costs one max-row footer probe. Sheets whose sniffed
+    headers are identical share one RDD job (their tiers interleave
+    freely); header variants become separate frames unioned by name.
+    Downstream coercion is the pipelines' job (F1/F2)."""
     groups: dict[tuple[str, ...], list[SheetRef]] = {}
     for ref in refs:
-        groups.setdefault(tuple(_sheet_header(ref)), []).append(ref)
+        groups.setdefault(ref.sniff.header, []).append(ref)
     parallelism = max(1, spark.sparkContext.defaultParallelism)
     frames = []
     for header, group_refs in groups.items():
-        width = len(header)
-        tasks: list[tuple[str, str, int, int]] = []
-        for ref in group_refs:
-            first_data_row = ref.sniff.header_row + 2  # 1-based, after header
-            last_row = max_rows.get(ref)
-            if last_row is None:
-                last_row = _sheet_max_row(ref.path, ref.sheet)
+        tasks = [
+            (ref.path, ref.sheet, lo, hi)
+            for ref in group_refs
             for lo, hi in tier_plan(
-                first_data_row,
-                last_row,
-                min_rows_per_task,
-                max_workers=parallelism,
-            ):
-                tasks.append((ref.path, ref.sheet, lo, hi))
-
-        def read_task(task: tuple[str, str, int, int], _width: int = width) -> list[list]:
-            # Executor-side: import by name so cloudpickle ships this
-            # closure by value without dragging the module graph along.
-            from train_reports_etl_spark.sources.report_reader import _engine_rows
-
-            path, sheet, lo, hi = task
-            out = []
-            for row in _engine_rows(path, sheet, lo, hi):
-                vals = [None if c is None else str(c) for c in row[:_width]]
-                vals.extend([None] * (_width - len(vals)))
-                out.append(vals)
-            return out
-
+                ref.sniff.header_row + 2,  # 1-based, after the header
+                _sheet_max_row(ref.path, ref.sheet),
+                parallelism,
+            )
+        ]
         schema = StructType([StructField(name, StringType(), True) for name in header])
         if not tasks:
             frames.append(spark.createDataFrame([], schema))
         else:
-            rdd = spark.sparkContext.parallelize(tasks, len(tasks)).flatMap(read_task)
-            frames.append(spark.createDataFrame(rdd, schema=schema))
+            rdd = spark.sparkContext.parallelize(tasks, len(tasks))
+            frames.append(
+                spark.createDataFrame(rdd.flatMap(partial(_read_task, width=len(header))), schema)
+            )
     return union_all(frames)
-
-
-def read_report(
-    spark: SparkSession,
-    refs: list[SheetRef],
-    max_workers: int | None = None,
-    reader: Callable[[SheetRef], DataFrame] | None = None,
-    distributed: bool | None = None,
-) -> DataFrame:
-    """S4/U1 — read all sheets of one report type in parallel and union
-    them (the reference's advertised parallel read).
-
-    ``distributed`` picks where the parallelism runs: ``True`` → tiers
-    as executor tasks (:func:`read_report_distributed`), ``False`` →
-    driver threads, ``None`` (default) → auto: executor path once the
-    workload exceeds one tier for any sheet, driver path for single
-    small sheets (no Spark job needed to read 100 rows). A caller
-    passing ``max_workers`` keeps the driver path under auto dispatch —
-    it is a concurrency THROTTLE (bounding open workbooks / memory),
-    and the executor path would silently ignore it; pass
-    ``distributed=True`` explicitly to override.
-
-    ``reader`` is injectable for tests; defaults to
-    :func:`read_sheet_as_strings`; passing it forces the driver path.
-    The union itself is lazy/narrow."""
-    sizes: dict[SheetRef, int] = {}
-    if reader is None and distributed is None and max_workers is None:
-        # Probe once; hand the sizes to WHICHEVER path runs so no sheet
-        # is re-probed (a footer probe can degrade to a row scan).
-        sizes = {r: _sheet_max_row(r.path, r.sheet) for r in refs}
-        distributed = len(refs) > 1 or any(
-            sizes[r] - (r.sniff.header_row + 2) + 1 > MIN_ROWS_PER_TASK
-            for r in refs
-        )
-        if distributed:
-            return read_report_distributed(spark, refs, max_rows=sizes)
-    elif reader is None and distributed:
-        return read_report_distributed(spark, refs)
-    reader = reader or (
-        lambda r: read_sheet_as_strings(
-            spark, r, max_workers=max_workers, max_row=sizes.get(r)
-        )
-    )
-    if len(refs) > 1:
-        with ThreadPoolExecutor(max_workers=min(len(refs), max_workers or _max_workers())) as ex:
-            dfs = list(ex.map(reader, refs))
-    else:
-        dfs = [reader(r) for r in refs]
-    return union_all(dfs)
-
-
-def read_report_csv(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """CSV variant of the same contract: all-string schema, header row,
-    splittable + distributed (the test/bulk path)."""
-    return (
-        spark.read.option("header", "true")
-        .option("inferSchema", "false")
-        .csv(paths)
-    )

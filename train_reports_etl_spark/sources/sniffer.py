@@ -25,6 +25,9 @@ PROBE_DEPTH = 50  # `reports_exporter_v0.83.py:432`
 class SniffResult:
     report_type: str
     header_row: int  # 0-based index of the header row within the probe
+    # Column names from the header row's cells; an empty cell is named
+    # ``Unnamed: <i>`` (pandas' convention for a blank header cell).
+    header: tuple[str, ...]
 
 
 def _normalize(cells: list) -> list[str]:
@@ -56,5 +59,8 @@ def sniff_rows(rows: list[list], headers: dict[str, list[str]] | None = None) ->
             continue
         for report_type, expected in headers.items():
             if got == list(expected):
-                return SniffResult(report_type=report_type, header_row=i)
+                columns = tuple(
+                    f"Unnamed: {j}" if c is None else str(c) for j, c in enumerate(row)
+                )
+                return SniffResult(report_type, i, columns)
     return None
