@@ -140,8 +140,12 @@ def test_conditional_day_shift_preserves_time(spark):
 
 
 def test_rebuild_timestamp(spark):
-    df = spark.createDataFrame([("2024-02-03", "23:50:00")], ["d", "h"])
-    assert str(df.select(rebuild_timestamp("d", "h")).head()[0]) == "2024-02-03 23:50:00"
+    df = spark.createDataFrame(
+        [("2024-02-03", "23:50:00"), ("2024-02-03", "09:05:00"), ("2024-02-03", "9:05:00")],
+        ["d", "h"],
+    )
+    out = [str(r[0]) for r in df.select(rebuild_timestamp("d", "h")).collect()]
+    assert out == ["2024-02-03 23:50:00", "2024-02-03 09:05:00", "2024-02-03 09:05:00"]
 
 
 def test_parse_props_types_fields_and_nulls_malformed(spark):

@@ -92,6 +92,15 @@ def test_early_train_service_date(spark, departure_times):
     assert r.service_date == "2024-03-05"
 
 
+def test_single_digit_departure_hour(spark):
+    # the departure-times sheet writes "9:00:00"; it must parse like "09:00:00"
+    dim = spark.createDataFrame([("AB123", "9:00:00")], ["train_number", "departure_time"])
+    row = tl_row(**{"Departure Date": "2024-03-05 09:30:00"})
+    r = run_tl(spark, dim, [row]).cleaned.head()
+    assert r.train_departure_date_time == "2024-03-05 09:00"
+    assert r.service_date == "2024-03-05"
+
+
 def test_missing_train_number_aborts(spark, departure_times):
     rows = [tl_row(**{"Train Number": "ZZ000"})]
     with pytest.raises(ValueError, match="ZZ000"):

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.operators.islands import consecutive_date_ranges
 from train_reports_etl_spark.plans.schemas import OCCUPANCY_HEADER, TRAIN_LIST_HEADER
 from train_reports_etl_spark.sinks.audit import (
     append_audit,
@@ -88,6 +91,56 @@ def test_load_report_returns_ranges_and_writes(spark, tmp_path):
     ranges = load_report(df, path, "d", partition_cols=["day"])
     assert ranges == [("2024-01-01", "2024-01-02"), ("2024-01-05", "2024-01-05")]
     assert spark.read.parquet(path).count() == 3
+
+
+@pytest.mark.parametrize("kind", ["constant", "scanned"])
+def test_load_report_empty_frame_returns_no_ranges(spark, tmp_path, kind):
+    if kind == "constant":
+        df = spark.createDataFrame([], "d date, v int")
+    else:
+        df = spark.range(10).filter("id > 100").selectExpr(
+            "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d", "CAST(id AS INT) AS v"
+        )
+    assert load_report(df, str(tmp_path / "t"), "d") == []
+
+
+def test_load_report_writes_one_file_per_date(spark, tmp_path):
+    # 3 dates in each of 8 input partitions: one file per date, not 8 x 3
+    path = str(tmp_path / "t")
+    df = spark.range(0, 240, 1, 8).selectExpr(
+        "date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS d", "id"
+    )
+    assert df.rdd.getNumPartitions() == 8
+    load_report(df, path, "d")
+    assert len(glob.glob(f"{path}/d=*/*.parquet")) == 3
+    assert spark.read.parquet(path).count() == 240
+
+
+def test_load_report_ranges_match_consecutive_date_ranges(spark, tmp_path):
+    # brute force: gaps, duplicates, NULLs and single dates, against the
+    # distributed island construction
+    rng = random.Random(7)
+    base = dt.date(2024, 1, 1)
+    cases = [[base], [base, base, None], [None]]
+    for _ in range(6):
+        days = rng.sample(range(40), rng.randint(1, 15))
+        cases.append(
+            [base + dt.timedelta(days=d) for d in days for _ in range(rng.randint(1, 3))]
+            + [None] * rng.randint(0, 2)
+        )
+    for i, case in enumerate(cases):
+        df = spark.createDataFrame([(d, 1) for d in case], "d date, v int")
+        want = [
+            (str(r.range_start), str(r.range_end))
+            for r in consecutive_date_ranges(df, "d").collect()
+        ]
+        assert load_report(df, str(tmp_path / f"t{i}"), "d") == want, case
+
+
+def test_audit_append_writes_one_file(spark, tmp_path):
+    apath = str(tmp_path / "audit")
+    append_audit(spark, apath, "train_list", "insert", [f"2024-01-0{i}" for i in range(1, 8)])
+    assert len(glob.glob(f"{apath}/*.parquet")) == 1
 
 
 def test_audit_append_and_version_gate(spark, tmp_path):

@@ -70,9 +70,10 @@ def conditional_day_shift(ts: Column | str, flag: Column) -> Column:
     return F.when(flag, c - F.expr("INTERVAL 1 DAY")).otherwise(c)
 
 
-def rebuild_timestamp(date_str: Column | str, time_str: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
+def rebuild_timestamp(date_str: Column | str, time_str: Column | str, fmt: str = "yyyy-MM-dd H:mm:ss") -> Column:
     """F14 — date string + time string → timestamp
-    (`reports_exporter_v0.83.py:655-659`)."""
+    (`reports_exporter_v0.83.py:655-659`). The single ``H`` accepts
+    both ``9:00:00`` and ``09:00:00``, as ``pd.to_datetime`` does."""
     return F.try_to_timestamp(F.concat_ws(" ", _c(date_str), _c(time_str)), F.lit(fmt))
 
 

@@ -2,11 +2,15 @@
 
 Reference linkage: none — operational scope the reference never hits
 (single-node pandas writes one file); at 100 TB it's unavoidable.
-Streaming foreachBatch loads (streaming/sinks.py), per-day partition
-overwrites and high-parallelism writes all shed many small parquet
-files; scans then pay per-file open/footer costs and lose row-group
-locality (the NameNode/object-store listing tax is real long before
-that). Compaction rewrites a table directory to ~``target_mb`` files.
+Per-day partition overwrites do not shed small files: they rebalance
+on the partition columns and write one file set per day
+(sinks/partitioned.py, also behind the foreachBatch streaming sink in
+streaming/sinks.py). Streaming appends do — a Structured Streaming
+file sink or any append-mode table (e.g. the audit trail) adds a file
+set per micro-batch or per append — as do high-parallelism writes
+outside that sink; scans then pay per-file open/footer costs and lose
+row-group locality (the NameNode/object-store listing tax is real long
+before that). Compaction rewrites a table directory to ~``target_mb`` files.
 
 Design: file sizes come from the JVM Hadoop FileSystem (no Python
 directory walk — works for any supported scheme, not just file://);

@@ -14,13 +14,26 @@ today``, `:1516`) fall out naturally by partitioning on
 
 Scale: date-partitioned parquet gives partition pruning on every
 downstream date filter; each load day writes only its partitions.
+
+File layout: the frame is rebalanced on the partition columns before
+the write (``REBALANCE`` hint). Without it every upstream task writes
+one file into every partition value it holds, so a load produces
+tasks × dates small files (32 window-shuffle tasks × 6 days = 192
+files of ~40 rows each for one report). Rebalancing hash-routes each
+partition value to one shuffle partition, and AQE then merges small
+partitions and splits skewed ones at the advisory size: a small day
+becomes one file, a huge day becomes files of the advisory size. File
+count scales with the partition values and their bytes, not with the
+parallelism of the plan that produced the frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import datetime as dt
+import logging
 
-from train_reports_etl_spark.operators.islands import consecutive_date_ranges
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def idempotent_overwrite(
@@ -38,14 +51,32 @@ def idempotent_overwrite(
     conf since Spark 3.0, so this sink is session-independent.
     Re-running the same load yields byte-identical table state
     (idempotency test in tests/test_sources_sinks.py).
+
+    The ``rebalance`` hint on ``partition_cols`` makes the file count
+    follow the partition values, not the upstream task count (module
+    docstring).
     """
     (
-        df.write.mode("overwrite")
+        df.hint("rebalance", *partition_cols)
+        .write.mode("overwrite")
         .format(file_format)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .save(path)
     )
+
+
+def _day_ranges(days: list[dt.date]) -> list[tuple[dt.date, dt.date]]:
+    """Group dates into sorted (begin, end) runs of consecutive days —
+    the reference's walk over the sorted distinct dates
+    (`reports_exporter_v0.83.py:1253-1298`). Duplicates are absorbed."""
+    ranges: list[list[dt.date]] = []
+    for d in sorted(days):
+        if ranges and (d - ranges[-1][1]).days <= 1:
+            ranges[-1][1] = d
+        else:
+            ranges.append([d, d])
+    return [(a, b) for a, b in ranges]
 
 
 def load_report(
@@ -58,18 +89,17 @@ def load_report(
     """Exporter flow (SURVEY.md §3.3): streak detection (W2) →
     idempotent partition overwrite. Returns the (begin, end) date
     ranges covered (the reference logs a warning when >1,
-    `reports_exporter_v0.83.py:1321-1325`).
-    """
-    ranges = [
-        (str(r.range_start), str(r.range_end))
-        for r in consecutive_date_ranges(df, date_col).collect()
-    ]
-    if warn_non_consecutive and len(ranges) > 1:
-        import logging
+    `reports_exporter_v0.83.py:1321-1325`); NULL dates are ignored.
 
+    The ranges come from one distinct aggregate over ``date_col`` cast
+    to date, collected to the driver and grouped there: the collect
+    returns one row per distinct date (~365 rows per year loaded).
+    """
+    days = df.select(F.col(date_col).cast("date").alias("d")).where("d IS NOT NULL").distinct()
+    ranges = [(str(a), str(b)) for a, b in _day_ranges([r.d for r in days.collect()])]
+    if warn_non_consecutive and len(ranges) > 1:
         logging.getLogger(__name__).warning(
             "load_report: non-consecutive dates — %d ranges: %s", len(ranges), ranges
         )
     idempotent_overwrite(df, path, partition_cols or [date_col])
     return ranges
-
