@@ -163,7 +163,7 @@ def test_hist_kth_matches_sorted_expansion(spark):
     expanded = sorted(v for v, c in vals.items() for _ in range(c))
     lo, hi = min(vals), max(vals)
     for k in (1, 2, len(expanded) // 2, len(expanded)):
-        assert _hist_kth(hist, "v", "c", k, lo, hi) == expanded[k - 1], k
+        assert _hist_kth(hist, "v", "c", [k], lo, hi)[0][0] == expanded[k - 1], k
     hist.unpersist()
 
 

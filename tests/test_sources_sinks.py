@@ -137,6 +137,18 @@ def test_load_report_ranges_match_consecutive_date_ranges(spark, tmp_path):
         assert load_report(df, str(tmp_path / f"t{i}"), "d") == want, case
 
 
+def test_load_report_date_collect_past_its_bound_fails_by_name(spark, tmp_path, monkeypatch):
+    from train_reports_etl_spark.driver import DriverBoundError
+    from train_reports_etl_spark.sinks import partitioned
+
+    df = spark.range(3).selectExpr("date_add(DATE'2024-01-01', CAST(id AS INT)) AS d", "id")
+    monkeypatch.setattr(partitioned, "MAX_LOAD_DATES", 3)
+    assert len(load_report(df, str(tmp_path / "ok"), "d")) == 1
+    monkeypatch.setattr(partitioned, "MAX_LOAD_DATES", 2)
+    with pytest.raises(DriverBoundError, match="load_report distinct dates: 3 rows, bound 2"):
+        load_report(df, str(tmp_path / "over"), "d")
+    assert not (tmp_path / "over").exists()
+
 def test_audit_append_writes_one_file(spark, tmp_path):
     apath = str(tmp_path / "audit")
     append_audit(spark, apath, "train_list", "insert", [f"2024-01-0{i}" for i in range(1, 8)])

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from train_reports_etl_spark.driver import local_frame
+
 
 def _lower_hull(points: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """Monotone-chain lower hull of (x, y) points sorted by x
@@ -171,9 +173,7 @@ def isotonic_calibration(
         (w1, w2, s2 - s1, w2 - w1)
         for (w1, s1), (w2, s2) in zip(hull, hull[1:])
     ]
-    seg_df = spark.createDataFrame(
-        segs, "w_lo long, w_hi long, d_pos long, d_w long"
-    )
+    seg_df = local_frame(spark, segs, "w_lo long, w_hi long, d_pos long, d_w long")
     fitted = F.floor(
         F.lit(1000) * (F.col("d_pos").cast("double") / F.col("d_w").cast("double"))
     ).cast("long")

@@ -32,9 +32,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from train_reports_etl_spark.driver import bounded_collect, local_frame
 from train_reports_etl_spark.extensions.text import tokens
+from train_reports_etl_spark.util import sql_div
 
 __all__ = [
     "bigram_rarity",
@@ -1052,6 +1055,17 @@ def dsir_importance(
 
 # ------------------------------------------------------------- E83
 
+#: Row bound of the source table :func:`waterfill_budget` collects.
+MAX_WATERFILL_SOURCES = 1_000_000
+
+
+def _sql_or(a: bool | None, b: bool | None) -> bool | None:
+    """SQL three-valued OR (None is NULL)."""
+    if a is True or b is True:
+        return True
+    return None if a is None or b is None else False
+
+
 def waterfill_budget(
     sources: DataFrame,
     budget: int,
@@ -1074,97 +1088,73 @@ def waterfill_budget(
     same tie-free exactness discipline as the isotonic hull. The
     fixpoint caps ≥1 source per round, so ``rounds`` ≥ #sources that
     ever cap suffices (gate corpora converge in 2; pinned by an
-    extra-round test). Base shares are ``floor(w·num/den)`` and the
-    integer shortfall (< #uncapped) tops up by LARGEST REMAINDER
-    (``w·num − base·den``, source tie-break) — Σ allocated equals
-    min(budget, Σ caps) EXACTLY.
+    extra-round test). Base shares are ``w·num div den`` (SQL ``div``,
+    truncating toward zero) and the integer shortfall (< #uncapped)
+    tops up by LARGEST REMAINDER (``w·num − base·den``, ties by
+    ``source`` ascending, NULL first) — with positive weights, Σ
+    allocated equals min(budget, Σ caps) EXACTLY. NULL caps and weights
+    follow SQL three-valued logic, as the unrolled SQL oracle does.
 
     Scale shape: the data-sized work is whatever aggregate BUILDS the
-    (source, cap) table; this function runs on G source rows — the
-    per-round scalars are 1-row aggregates broadcast back, and the
-    remainder rank is a G-row window (sketch-rows precedent, never
-    data). BIGINT cross products hold to caps ~3·10⁹ at weight
-    ~isqrt(cap); beyond that swap the two product columns to
-    decimal(38,0) — noted here because 100 TB corpora do exceed it.
+    (source, cap) table. This function brings its G source rows to the
+    driver in ONE collect (bound :data:`MAX_WATERFILL_SOURCES`, past
+    which it raises :class:`~train_reports_etl_spark.driver.DriverBoundError`),
+    runs the fixpoint, base shares and top-up on Python integers —
+    exact at any magnitude, no BIGINT product limit — and returns a
+    local frame, so no per-round job runs.
 
     Output: (source, cap, w, allocated, capped) with the invariants
     above. Deterministic — strong oracle (unrolled MATERIALIZED CTEs).
     """
-    cur = sources.select(
-        "source",
-        F.col("cap").cast("long").alias("cap"),
-        F.col("w").cast("long").alias("w"),
-        F.lit(False).alias("capped"),
-    ).localCheckpoint(eager=True)
+    rows = bounded_collect(
+        sources.select(
+            "source", F.col("cap").cast("long"), F.col("w").cast("long")
+        ),
+        MAX_WATERFILL_SOURCES,
+        "waterfill_budget sources",
+    )
+
+    def num_den(capped):
+        num = budget - sum(c for (_, c, _), k in zip(rows, capped) if k and c is not None)
+        den = sum(w for (_, _, w), k in zip(rows, capped) if k is False and w is not None)
+        return num, den
+
+    capped = [False] * len(rows)
     for _ in range(rounds):
-        scal = cur.agg(
-            (F.lit(budget) - F.coalesce(
-                F.sum(F.when(F.col("capped"), F.col("cap"))), F.lit(0)
-            )).cast("long").alias("num"),
-            F.coalesce(
-                F.sum(F.when(~F.col("capped"), F.col("w"))), F.lit(0)
-            ).cast("long").alias("den"),
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(scal))
-            .select(
-                "source",
-                "cap",
-                "w",
-                (
-                    F.col("capped")
-                    | (
-                        (F.col("den") > 0)
-                        & (F.col("cap") * F.col("den") <= F.col("w") * F.col("num"))
-                    )
-                ).alias("capped"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    scal = cur.agg(
-        (F.lit(budget) - F.coalesce(
-            F.sum(F.when(F.col("capped"), F.col("cap"))), F.lit(0)
-        )).cast("long").alias("num"),
-        F.coalesce(
-            F.sum(F.when(~F.col("capped"), F.col("w"))), F.lit(0)
-        ).cast("long").alias("den"),
+        num, den = num_den(capped)
+        capped = [
+            _sql_or(k, den > 0 and (None if c is None or w is None else c * den <= w * num))
+            for (_, c, w), k in zip(rows, capped)
+        ]
+    num, den = num_den(capped)
+    base, rem = [], []
+    for (_, c, w), k in zip(rows, capped):
+        q = None if k or w is None else sql_div(w * num, max(den, 1))
+        base.append(c if k else q)
+        rem.append(0 if k else None if q is None else w * num - q * den)
+    caps = [c for _, c, _ in rows if c is not None]
+    bases = [b for b in base if b is not None]
+    # SQL: least() skips a NULL Σcap; a NULL Σbase makes the shortfall NULL.
+    short = (min(budget, sum(caps)) if caps else budget) - sum(bases) if bases else None
+    order = sorted(
+        range(len(rows)),
+        key=lambda i: (rem[i] is None, -(rem[i] or 0), rows[i][0] is not None, rows[i][0]),
     )
-    base = cur.crossJoin(F.broadcast(scal)).select(
-        "source",
-        "cap",
-        "w",
-        "capped",
-        F.when(F.col("capped"), F.col("cap"))
-        .otherwise(F.expr("(w * num) div greatest(den, 1L)"))
-        .cast("long")
-        .alias("base"),
-        F.when(F.col("capped"), F.lit(0))
-        .otherwise(F.expr("w * num - ((w * num) div greatest(den, 1L)) * den"))
-        .cast("long")
-        .alias("rem"),
+    out = []
+    for rnk, i in enumerate(order, 1):
+        src, c, w = rows[i]
+        k = capped[i]
+        # base + CAST((NOT capped) AND rnk <= shortfall AS BIGINT), NULL-propagating
+        fits = None if short is None else rnk <= short
+        top = False if k is True or fits is False else None if k is None or fits is None else True
+        alloc = None if base[i] is None or top is None else base[i] + int(top)
+        out.append((src, c, w, alloc, k))
+    schema = StructType(
+        [sources.schema["source"]]
+        + [StructField(n, LongType()) for n in ("cap", "w", "allocated")]
+        + [StructField("capped", BooleanType())]
     )
-    short = base.agg(
-        (F.least(F.lit(budget), F.sum("cap")) - F.sum("base"))
-        .cast("long")
-        .alias("shortfall")
-    )
-    w_rank = Window.orderBy(F.desc("rem"), "source")
-    return (
-        base.crossJoin(F.broadcast(short))
-        .withColumn("rnk", F.row_number().over(w_rank))
-        .select(
-            "source",
-            "cap",
-            "w",
-            (
-                F.col("base")
-                + (
-                    (~F.col("capped")) & (F.col("rnk") <= F.col("shortfall"))
-                ).cast("long")
-            ).cast("long").alias("allocated"),
-            "capped",
-        )
-    )
+    return local_frame(sources.sparkSession, out, schema)
 
 
 def loo_source_impact(docs: DataFrame) -> DataFrame:

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.driver import bounded_collect, local_frame
+from train_reports_etl_spark.util import sql_div
+
 # Exact-integer χ² requires 10⁶·N⁵ ≤ 10³⁸ (the DECIMAL(38,0) ceiling):
 # N ≤ ~2.5·10⁶; enforced at 2·10⁶ with margin. Module-level so tests
 # can shrink it instead of building two million rows.
@@ -191,7 +194,7 @@ def retrieval_mrr_recall(
             for k in ks
         ],
     )
-    kdf = docs.sparkSession.createDataFrame([(k,) for k in ks], "k int")
+    kdf = local_frame(docs.sparkSession, [(k,) for k in ks], "k int")
     return (
         kdf.crossJoin(F.broadcast(stats))
         .crossJoin(F.broadcast(n_rel))
@@ -417,7 +420,8 @@ def padding_waste(
         rows = arrival_cost().unionByName(length_sorted_cost()).collect()
     finally:
         lens.unpersist()
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "method string, n_batches long, token_sum long, padded_sum long, "
         "waste_ppm long",
@@ -471,7 +475,7 @@ def mad_outlier_gate(events: DataFrame, k: int = 3) -> DataFrame:
             rows = []
         else:
             krank = (n + 1) // 2  # lower median
-            med = _hist_kth(hist, "cents", "c", krank, stats["lo"], stats["hi"])
+            med = _hist_kth(hist, "cents", "c", [krank], stats["lo"], stats["hi"])[0][0]
             devhist = (
                 hist.select(
                     F.abs(F.col("cents") - F.lit(med)).alias("dev"), "c"
@@ -482,7 +486,7 @@ def mad_outlier_gate(events: DataFrame, k: int = 3) -> DataFrame:
             )
             # dev range is known from the cents range — no extra action.
             dev_hi = max(med - stats["lo"], stats["hi"] - med)
-            mad = _hist_kth(devhist, "dev", "c", krank, 0, dev_hi)
+            mad = _hist_kth(devhist, "dev", "c", [krank], 0, dev_hi)[0][0]
             rows = (
                 devhist.agg(
                     F.sum("c").cast("long").alias("n"),
@@ -509,7 +513,8 @@ def mad_outlier_gate(events: DataFrame, k: int = 3) -> DataFrame:
         hist.unpersist()
         if devhist is not None:
             devhist.unpersist()
-    return events.sparkSession.createDataFrame(
+    return local_frame(
+        events.sparkSession,
         rows,
         "n long, med_cents long, mad_cents long, n_outliers long, "
         "outlier_ppm long",
@@ -520,49 +525,62 @@ def _hist_kth(
     hist: DataFrame,
     val_col: str,
     cnt_col: str,
-    k: int,
+    ks: list[int],
     lo: int,
     hi: int,
     max_rows: int = 65536,
-) -> int:
-    """Exact k-th smallest value (1-based, counting multiplicity) of a
-    persisted integer (value, count) HISTOGRAM, by driver-side range
-    refinement: while the candidate value span exceeds ``max_rows``,
-    aggregate the span into ≤ ``max_rows`` equal-width integer buckets
-    (one cached-table aggregate + one ≤ ``max_rows``-row collect), walk
-    the bucket prefix on the driver, and recurse into the bucket
-    containing rank k. Each refinement divides the span by ≥ 2¹⁶, so an
-    int64 domain terminates in ≤ 4 rounds — the e83 bounded-bisection
-    precedent. Driver traffic is ≤ ``max_rows`` skinny rows per round
-    (the approxQuantile-cuts class); no window, no sort, no broadcast
-    anywhere, which keeps the per-lookup cost a couple of trivial
-    stage-jobs at sf0.1 and bounded at any scale."""
-    v = F.col(val_col)
-    while hi - lo + 1 > max_rows:
-        span = hi - lo + 1
-        shift = max(0, (span - 1).bit_length() - 16)
-        buckets = (
-            hist.filter(v.between(lo, hi))
-            .groupBy(F.shiftright(v - lo, shift).alias("b"))
-            .agg(F.sum(cnt_col).alias("bc"))
-            .collect()
-        )
-        for b, bc in sorted((r["b"], r["bc"]) for r in buckets):
-            if k <= bc:
-                lo, hi = lo + (b << shift), min(hi, lo + (b << shift) + (1 << shift) - 1)
-                break
-            k -= bc
-        else:  # k exceeds total mass — caller passed an impossible rank
-            raise ValueError(f"_hist_kth: rank {k} beyond histogram mass")
-    rows = sorted(
-        (r[val_col], r[cnt_col])
-        for r in hist.filter(v.between(lo, hi)).collect()
-    )
-    for val, c in rows:
-        if k <= c:
-            return int(val)
-        k -= c
-    raise ValueError(f"_hist_kth: rank {k} beyond histogram mass")
+) -> list[tuple[int, int, int]]:
+    """Exact order statistics of a persisted integer (value, count)
+    HISTOGRAM whose values lie in [lo, hi]: for each 1-based rank in
+    ``ks`` (counting multiplicity), ``(value, n_below, sum_below)`` —
+    the rank's value, and the count and count-weighted value sum of
+    the mass strictly below that value.
+
+    Driver-side range refinement: while the candidate value span
+    exceeds ``max_rows``, aggregate the span into ≤ ``max_rows``
+    equal-width integer buckets (one cached-table aggregate + one
+    bounded collect), walk the bucket prefix on the driver, and recurse
+    into the bucket holding each rank. Ranks that fall into the same
+    bucket share every collect until their buckets split; from then on
+    each window refines on its own. Each refinement divides the span
+    by ~``max_rows`` (≥ 2), so at the default an int64 domain
+    terminates in ≤ 4 rounds — the e83 bounded-bisection precedent.
+    Driver traffic is ≤ ``max_rows`` skinny rows per collect (the
+    approxQuantile-cuts class, enforced by :func:`bounded_collect`);
+    no window, no sort, no broadcast anywhere, which keeps the
+    per-lookup cost a couple of trivial stage-jobs at sf0.1 and
+    bounded at any scale."""
+    v, c = F.col(val_col), F.col(cnt_col)
+    out: list[tuple[int, int, int]] = [(0, 0, 0)] * len(ks)
+    todo = [(lo, hi, 0, 0, sorted((k, i) for i, k in enumerate(ks)))]
+    while todo:
+        lo, hi, n_below, sum_below, want = todo.pop()
+        window = hist.filter(v.between(lo, hi))
+        # smallest bucket width 2^shift giving ≤ max_rows buckets
+        shift = ((hi - lo) // max_rows).bit_length()
+        if shift:
+            window = window.groupBy(F.shiftright(v - lo, shift)).agg(F.sum(c), F.sum(v * c))
+            rows = bounded_collect(window, max_rows, "_hist_kth buckets")
+            cells = [(lo + (b << shift), n, s) for b, n, s in rows]
+        else:
+            rows = bounded_collect(window.select(v, c), max_rows, "_hist_kth values")
+            cells = [(x, n, x * n) for x, n in rows]
+        j = 0
+        for start, n, s in sorted(cells):
+            inside = []
+            while j < len(want) and want[j][0] <= n_below + n:
+                inside.append(want[j])
+                j += 1
+            if shift and inside:
+                end = min(hi, start + (1 << shift) - 1)
+                todo.append((start, end, n_below, sum_below, inside))
+            else:
+                for _, i in inside:
+                    out[i] = (int(start), n_below, sum_below)
+            n_below, sum_below = n_below + n, sum_below + s
+        if j < len(want):  # the caller passed an impossible rank
+            raise ValueError(f"_hist_kth: rank {want[j][0]} beyond histogram mass")
+    return out
 
 
 def auc_rank_sum(
@@ -637,9 +655,7 @@ def auc_rank_sum(
         )
     finally:
         per.unpersist()
-    return events.sparkSession.createDataFrame(
-        rows, "n long, n_pos long, n_neg long, auc_ppm long"
-    )
+    return local_frame(events.sparkSession, rows, "n long, n_pos long, n_neg long, auc_ppm long")
 
 
 def chi2_token_label(
@@ -838,8 +854,8 @@ def spearman_rankers(
         )
     finally:
         lens.unpersist()
-    return docs.sparkSession.createDataFrame(
-        rows, "n long, sum_d2 long, discordance_ppm long, rho_ppm long"
+    return local_frame(
+        docs.sparkSession, rows, "n long, sum_d2 long, discordance_ppm long, rho_ppm long"
     )
 
 
@@ -1115,9 +1131,7 @@ def ks_statistic(
         )
     finally:
         per.unpersist()
-    return events.sparkSession.createDataFrame(
-        rows, "n_a long, n_b long, d_ppm long"
-    )
+    return local_frame(events.sparkSession, rows, "n_a long, n_b long, d_ppm long")
 
 
 def trimmed_winsorized_mean(
@@ -1139,13 +1153,15 @@ def trimmed_winsorized_mean(
 
     Scale (r11 — histogram form, the E99 treatment): ONE map-combinable
     (cents, count) aggregate over the corpus; the two trim boundaries
-    are exact order-statistic lookups on the cached histogram
-    (:func:`_hist_kth` — driver-side range refinement, bounded
-    ≤ 65,536-row collects), and the trimmed sum folds out of one
-    conditional aggregate over the histogram plus exact boundary
-    arithmetic (rows strictly below the (k+1)-th value number < k, so
-    the boundary value contributes ``k − count_below`` bottom-trimmed
-    copies; symmetrically on top). Tie handling is value-blind — the
+    are exact order-statistic lookups on the cached histogram, both
+    ranks in one :func:`_hist_kth` call (driver-side range refinement,
+    bounded ≤ 65,536-row collects shared until the ranks' buckets
+    split). The lookup also returns the count and sum of the mass
+    below each boundary value, so the trimmed sum is exact prefix-sum
+    arithmetic on the driver, with no further aggregate (rows strictly
+    below the (k+1)-th value number < k, so the boundary value
+    contributes ``k − count_below`` bottom-trimmed copies;
+    symmetrically on top). Tie handling is value-blind — the
     (cents, event_id) total order only decides WHICH of several
     equal-valued rows trim, never the sums — so the histogram result
     is identical to the r10 per-row rank form, which sorted every row
@@ -1166,16 +1182,9 @@ def trimmed_winsorized_mean(
         "trimmed_mean_millicents long, winsorized_mean_millicents long"
     )
 
-    def _tdiv(a: int, b: int) -> int:
-        # SQL `div` truncates toward zero; python // floors. Identical
-        # for the non-negative gate domain, kept exact for negatives.
-        q = abs(a) // abs(b)
-        return q if (a < 0) == (b < 0) else -q
-
     try:
         stats = hist.agg(
             F.sum("c").cast("long").alias("n"),
-            F.sum(F.col("c") * F.col("cents")).cast("long").alias("total"),
             F.min("cents").alias("lo0"),
             F.max("cents").alias("hi0"),
         ).collect()[0]
@@ -1189,48 +1198,25 @@ def trimmed_winsorized_mean(
                     f"trimmed_winsorized_mean: trim_ppm={trim_ppm} leaves "
                     f"no rows at n={n}"
                 )
-            lo = _hist_kth(hist, "cents", "c", k + 1, stats["lo0"], stats["hi0"])
-            hi = _hist_kth(hist, "cents", "c", n - k, stats["lo0"], stats["hi0"])
-            b = hist.agg(
-                F.sum(
-                    F.when(F.col("cents") < lo, F.col("c") * F.col("cents"))
-                    .otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias("below_sum"),
-                F.sum(
-                    F.when(F.col("cents") < lo, F.col("c")).otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias("below_cnt"),
-                F.sum(
-                    F.when(F.col("cents") > hi, F.col("c") * F.col("cents"))
-                    .otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias("above_sum"),
-                F.sum(
-                    F.when(F.col("cents") > hi, F.col("c")).otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias("above_cnt"),
-            ).collect()[0]
-            bottomk = b["below_sum"] + lo * (k - b["below_cnt"])
-            topk = b["above_sum"] + hi * (k - b["above_cnt"])
-            tsum = int(stats["total"]) - bottomk - topk
+            (lo, n_lo, s_lo), (hi, n_hi, s_hi) = _hist_kth(
+                hist, "cents", "c", [k + 1, n - k], stats["lo0"], stats["hi0"]
+            )
+            # Σ of ranks ≤ r is sum_below + value·(r − n_below): ranks
+            # k+1 … n−k are the prefix through n−k minus the one through k.
+            tsum = (s_hi + hi * (n - k - n_hi)) - (s_lo + lo * (k - n_lo))
             rows = [
                 (
                     int(n),
                     int(k),
                     int(lo),
                     int(hi),
-                    _tdiv(1000 * tsum, int(n) - 2 * k),
-                    _tdiv(1000 * (tsum + k * lo + k * hi), int(n)),
+                    sql_div(1000 * tsum, int(n) - 2 * k),
+                    sql_div(1000 * (tsum + k * lo + k * hi), int(n)),
                 )
             ]
     finally:
         hist.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def effective_sample_size(docs: DataFrame) -> DataFrame:
@@ -1301,7 +1287,8 @@ def effective_sample_size(docs: DataFrame) -> DataFrame:
         rows = out.collect()
     finally:
         per_doc.unpersist()
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "scheme string, n_units long, sum_w long, sum_w2 long, "
         "ess_x1000 long, ess_ratio_ppm long",
@@ -1526,7 +1513,8 @@ def bootstrap_mean_ci(
             int(means[hi_i] - means[lo_i]),
         )
     ]
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         out,
         "n_docs long, n_boot long, mean_tokens_ppm long, "
         "boot_lo_ppm long, boot_hi_ppm long, boot_spread_ppm long",
@@ -1723,7 +1711,8 @@ def cramers_v(
     finally:
         cells.unpersist()
     v2 = int(chi) // (n * dof) if dof > 0 else None
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         [(n, nr, nc, dof, int(chi), v2)],
         "n long, n_rows long, n_cols long, dof_min long, chi2_e6 long, "
         "v2_ppm long",
@@ -2132,7 +2121,8 @@ def kendall_tau_b(
         rows = out.collect()
     finally:
         cells.unpersist()
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "n long, pairs_total long, ties_x long, ties_y long, ties_xy long, "
         "concordant long, discordant long, tau_b_ppm long",
@@ -2235,8 +2225,8 @@ def wasserstein1(
         )
     finally:
         per.unpersist()
-    return events.sparkSession.createDataFrame(
-        rows, "n_a long, n_b long, n_support long, w1_millicents long"
+    return local_frame(
+        events.sparkSession, rows, "n_a long, n_b long, n_support long, w1_millicents long"
     )
 
 
@@ -2327,7 +2317,8 @@ def transition_entropy(
         (1_000_000 * max(mi, 0)) // h_next if h_next > 0 else None
     )
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n,
@@ -2402,6 +2393,4 @@ def event_flow_trigrams(
         )
     finally:
         tri.unpersist()
-    return events.sparkSession.createDataFrame(
-        rows, "flow string, c long, share_ppm long"
-    )
+    return local_frame(events.sparkSession, rows, "flow string, c long, share_ppm long")

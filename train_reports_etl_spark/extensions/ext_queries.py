@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from train_reports_etl_spark.driver import local_frame
 from train_reports_etl_spark.extensions import similarity as sim
 from train_reports_etl_spark.extensions.dedup import (
     duplicate_groups,
@@ -32,6 +33,7 @@ from train_reports_etl_spark.extensions.text import (
     token_count,
 )
 from train_reports_etl_spark.plans.registry import bench_query, query
+from train_reports_etl_spark.session import conf_scope
 from train_reports_etl_spark.sources.registry import load_table
 from train_reports_etl_spark.streaming.windows import (
     session_windows,
@@ -988,17 +990,13 @@ def _run_to_memory_until_flushed(out, name: str, n_state_partitions: int = 8):
     import time
 
     spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
-    try:
+    with conf_scope(spark, "spark.sql.shuffle.partitions", str(n_state_partitions)):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
         last, stable = -1, 0
@@ -1032,12 +1030,8 @@ def _run_counting_until_flushed(out, name: str, n_state_partitions: int = 8) -> 
         totals["rows"] += df.count()
 
     spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
-    try:
+    with conf_scope(spark, "spark.sql.shuffle.partitions", str(n_state_partitions)):
         q = out.writeStream.outputMode("append").foreachBatch(_count).start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
         last, stable = -1, 0
@@ -1065,7 +1059,7 @@ def _probe_session_windows_counting(spark: SparkSession, sf_dir: str) -> DataFra
 
     out = streaming_session_sums(_stream_events(spark, sf_dir))
     n = _run_counting_until_flushed(out, "e5_streaming_session_probe")
-    return spark.createDataFrame([(int(n),)], "emitted_rows bigint")
+    return local_frame(spark, [(int(n),)], "emitted_rows bigint")
 
 
 #: probe-only sink overrides: query name -> callable with the same
@@ -1087,17 +1081,13 @@ def _run_to_memory(out, name: str, n_state_partitions: int = 8):
     vanilla session would use 200). Restored immediately after start.
     """
     spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
-    try:
+    with conf_scope(spark, "spark.sql.shuffle.partitions", str(n_state_partitions)):
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
         _capture_stream_state(q, name)
@@ -1131,15 +1121,11 @@ def e1_streaming_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame
     (tests/test_streaming.py)."""
     from train_reports_etl_spark.streaming.stateful import streaming_dedup_first_seen
 
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_scope(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"):
         out = streaming_dedup_first_seen(
             _stream_events(spark, sf_dir), key_col="user_id", ts_col="ts"
         )
         _run_to_memory(out, "e1_streaming_dedup_sink")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
     return spark.table("e1_streaming_dedup_sink")
 
 
@@ -1181,9 +1167,7 @@ def e5_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduling, not data, so it stays out of the oracle contract.)"""
     from train_reports_etl_spark.streaming.stateful import streaming_sessionize
 
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_scope(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"):
         out = streaming_sessionize(
             # LONG cents: the sessionizer preserves the integral class,
             # folding in int64 state — exact at any scale, on-policy
@@ -1199,8 +1183,6 @@ def e5_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="30 minutes",
         )
         _run_to_memory(out, "e5_stateful_sessionize_sink")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
     return spark.table("e5_stateful_sessionize_sink").withColumn(
         "sum_value_cents", F.col("sum_value").cast("long")
     ).drop("sum_value")
@@ -1746,13 +1728,9 @@ def e5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev2 = _stream_events(spark, sf_dir)
     purchases = ev1.filter(F.col("event_type") == "purchase")
     views = ev2.filter(F.col("event_type") == "view")
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_scope(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"):
         out = streaming_interval_join(purchases, views, lookback="12 hours")
         _run_to_memory(out, "e5_stream_stream_sink")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
     return spark.table("e5_stream_stream_sink")
 
 
@@ -3103,7 +3081,8 @@ def e5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot-join via foreachBatch; the aggregation state is one row
     per category. Oracle: stream-static join semantics are defined to
     match the batch join, so the batch SQL twin is exact."""
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("purchase", "revenue", 5),
             ("signup", "revenue", 3),
@@ -3119,17 +3098,13 @@ def e5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("weight").cast("long").alias("total_weight"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             enriched.writeStream.outputMode("complete")
             .format("memory")
             .queryName("e5_stream_static_sink")
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.processAllAvailable()
     q.stop()
     return spark.table("e5_stream_static_sink")
@@ -6174,17 +6149,13 @@ def e1_stream_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_new"),
         F.sum("event_id").cast("long").alias("id_sum"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName("e1_stream_corpus_dedup_sink")
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.processAllAvailable()
     q.stop()
     return spark.table("e1_stream_corpus_dedup_sink")
@@ -6243,8 +6214,8 @@ def e4_classifier_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("score_ppm").alias("score"),
         )
     )
-    thr = spark.createDataFrame(
-        [(-2000000,), (-1000000,), (0,), (1000000,), (2000000,)], "thr long"
+    thr = local_frame(
+        spark, [(-2000000,), (-1000000,), (0,), (1000000,), (2000000,)], "thr long"
     )
     crossed = scored.crossJoin(F.broadcast(thr))
     pred = F.col("score") > F.col("thr")
@@ -6797,7 +6768,8 @@ def j10_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("event_type"))
         .alias("etype"),
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("purchase", "revenue"),
             ("signup", "revenue"),
@@ -7431,8 +7403,8 @@ def e1_dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches: on a corpus with no pair reaching 0.5 both sides emit 0
     rows (an unfiltered oracle would emit 5 zero rows there)."""
     scored = _shared_jaccard_pairs(spark, sf_dir).select("jaccard")
-    thresholds = spark.createDataFrame(
-        [(0.5,), (0.6,), (0.7,), (0.8,), (0.9,)], "threshold double"
+    thresholds = local_frame(
+        spark, [(0.5,), (0.6,), (0.7,), (0.8,), (0.9,)], "threshold double"
     )
     return (
         F.broadcast(thresholds)
@@ -9882,9 +9854,7 @@ def e85_streaming_hll_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_hll_session_distinct,
     )
 
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_scope(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"):
         out = streaming_hll_session_distinct(
             _stream_events(spark, sf_dir),
             key_col="user_id",
@@ -9894,8 +9864,6 @@ def e85_streaming_hll_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="30 minutes",
         )
         _run_to_memory(out, "e85_streaming_hll_sink")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
     return spark.table("e85_streaming_hll_sink")
 
 
@@ -10117,9 +10085,7 @@ def e88_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(F.sum("g").cast("long").alias("idcg_micro"))
     )
-    kdf = ranked.sparkSession.createDataFrame(
-        [(k,) for k in _NDCG_KS], "k int"
-    )
+    kdf = local_frame(ranked.sparkSession, [(k,) for k in _NDCG_KS], "k int")
     return (
         kdf.join(F.broadcast(dcg), "k", "left")
         .join(F.broadcast(idcg), "k")
@@ -10222,7 +10188,8 @@ def e89_hll_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.col("hll_estimate").alias("est")
     )
     srcs = sorted(r[0] for r in regs.select("source").distinct().collect())
-    pairs = spark.createDataFrame(
+    pairs = local_frame(
+        spark,
         [(a, b) for i, a in enumerate(srcs) for b in srcs[i + 1:]],
         "src_a string, src_b string",
     )
@@ -10357,7 +10324,8 @@ def e90_kcenter_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = repartition_if_coarse(quantize_vectors(emb)).persist()
     try:
         centers, _ = kcenter_select_portable(emb, k=8, quantized=q)
-        cent_df = spark.createDataFrame(
+        cent_df = local_frame(
+            spark,
             [(c[0], int(c[1]), c[3]) for c in centers],
             "center_rank int, center_id long, sel_d2 long",
         )

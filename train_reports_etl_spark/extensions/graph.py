@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from train_reports_etl_spark.driver import local_frame
+
 __all__ = [
     "connected_components",
     "dedup_clusters",
@@ -108,9 +110,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     schema = T.StructType(
         [T.StructField("u", u_type), T.StructField("component", u_type)]
     )
-    return spark.createDataFrame(
-        [(x, find(x)) for x in parent], schema=schema
-    )
+    return local_frame(spark, [(x, find(x)) for x in parent], schema)
 
 
 def connected_components(

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from train_reports_etl_spark.driver import local_frame
+
 #: grouping_id → ladder level for ROLLUP(nation, segment, bal_bucket):
 #: 0 keeps all three, 1 drops the bucket, 3 keeps nation only,
 #: 7 is the fully-generalized root (always k-anonymous for n >= k).
@@ -302,4 +304,4 @@ def t_closeness_audit(
         "level int, n_classes long, max_tvd_ppm long, "
         "violating_rows long, t_close boolean"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -23,6 +23,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.driver import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ in double, sequential order (bit-reproducible across
@@ -495,7 +497,7 @@ def _assign_matmul(df, cents_rows, id_col: str, vec_col: str) -> DataFrame:
     spark = df.sparkSession
     if not cents_rows:
         # fold-path parity: no centroids -> empty assignment
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     cids = [r["cid"] for r in cents_rows]
     cvecs = [[float(x) for x in r["cvec"]] for r in cents_rows]
 

@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..driver import local_frame
 from ..util import repartition_if_coarse
 
 #: Minimal function-word profiles for the heuristic language scorer.
@@ -1364,8 +1365,8 @@ def pmi_collocations(
         rows = out.collect()
     finally:
         toks.unpersist()
-    return docs.sparkSession.createDataFrame(
-        rows, "bigram string, c_xy long, c_x long, c_y long, pmi_millibits long"
+    return local_frame(
+        docs.sparkSession, rows, "bigram string, c_xy long, c_x long, c_y long, pmi_millibits long"
     )
 
 
@@ -1428,7 +1429,8 @@ def head_coverage(
         )
         for k in ks
     ]
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "k long, n_types long, total_tokens long, head_tokens long, "
         "coverage_ppm long",
@@ -1494,7 +1496,8 @@ def source_vocab_jaccard(
         rows = out.collect()
     finally:
         vocab.unpersist()
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "source_a string, source_b string, v_a long, v_b long, inter long, "
         "jaccard_ppm long",
@@ -1601,7 +1604,8 @@ def zipf_slope(
         ).collect()
     finally:
         cnt.unpersist()
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "n_fit long, sum_x_mb long, sum_y_mb long, sum_xy long, sum_xx long, "
         "neg_slope_num long, slope_den long, neg_slope_ppm long, "
@@ -1888,7 +1892,8 @@ def heaps_law_checkpoints(
         (i, int(ranks[i]), int(ntok[f"n{i}"]), int(vrow[f"v{i}"]))
         for i in range(len(ranks))
     ]
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         rows,
         "k long, n_docs long, n_tokens long, v_types long",
     )

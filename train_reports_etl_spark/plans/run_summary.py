@@ -20,10 +20,11 @@ from __future__ import annotations
 import json
 import traceback
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import asdict, astuple, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from train_reports_etl_spark.driver import local_frame
 from train_reports_etl_spark.plans.report_pipelines import ReportResult
 
 
@@ -36,15 +37,6 @@ class RunEvent:
     unit: str  # file path, "path#sheet", or report name
     ok: bool
     error: str | None = None
-
-    def as_row(self) -> dict:
-        return {
-            "report": self.report,
-            "stage": self.stage,
-            "unit": self.unit,
-            "ok": self.ok,
-            "error": self.error,
-        }
 
 
 @dataclass
@@ -76,7 +68,7 @@ class RunSummary:
     def frame(self, spark: SparkSession) -> DataFrame:
         """The summary as a tiny DataFrame (for the audit sink, S12)."""
         schema = "report string, stage string, unit string, ok boolean, error string"
-        return spark.createDataFrame([e.as_row() for e in self.events], schema=schema)
+        return local_frame(spark, [astuple(e) for e in self.events], schema)
 
     def to_json(self) -> str:
         return json.dumps(
@@ -84,7 +76,7 @@ class RunSummary:
                 "errors_found": self.errors_found,
                 "n_events": len(self.events),
                 "n_failures": len(self.failures),
-                "events": [e.as_row() for e in self.events],
+                "events": [asdict(e) for e in self.events],
             },
             indent=2,
         )

@@ -18,6 +18,8 @@ We pin the equivalent Spark semantics once, here, so they cannot drift:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -78,3 +80,19 @@ def get_spark(app_name: str = "train-reports-etl-spark", master: str | None = No
     if master:
         builder = builder.master(master)
     return configure(builder).getOrCreate()
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the ``with`` body, then
+    restore it: the old value if the key had one, unset if it had none
+    (so a vanilla session's conf reads the same before and after)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

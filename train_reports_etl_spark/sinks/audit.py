@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.driver import local_frame
+
 AUDIT_SCHEMA = "ts timestamp, table_name string, operation string, period string, user string"
 
 
@@ -24,15 +26,14 @@ def append_audit(
 ) -> None:
     """S12 — append one audit row per covered period (atomic parquet
     append; an append-only table never conflicts with concurrent loads
-    of other reports). The frame holds one row per period and is built
-    from a single slice, so each append writes a single file; a
-    ``coalesce(1)`` over the default slices does the same at twice the
-    wall time."""
-    rows = spark.sparkContext.parallelize([(table_name, operation, p, user) for p in periods], 1)
+    of other reports). The rows form a local frame coalesced to one
+    partition, so each append writes a single file."""
+    rows = [(table_name, operation, p, user) for p in periods]
     df = (
-        spark.createDataFrame(rows, "table_name string, operation string, period string, user string")
+        local_frame(spark, rows, "table_name string, operation string, period string, user string")
         .withColumn("ts", F.current_timestamp())
         .select("ts", "table_name", "operation", "period", "user")
+        .coalesce(1)
     )
     df.write.mode("append").parquet(path)
 
@@ -66,7 +67,7 @@ def check_version_gate(spark: SparkSession, path: str, my_version: float) -> Non
 
 
 def record_version(spark: SparkSession, path: str, version: float) -> None:
-    df = spark.createDataFrame([(version,)], "version double").withColumn(
+    df = local_frame(spark, [(version,)], "version double").withColumn(
         "ts", F.current_timestamp()
     )
     df.write.mode("append").parquet(path)

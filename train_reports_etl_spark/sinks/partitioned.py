@@ -35,6 +35,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.driver import bounded_collect
+
 
 def idempotent_overwrite(
     df: DataFrame,
@@ -66,6 +68,10 @@ def idempotent_overwrite(
     )
 
 
+#: Row bound of ``load_report``'s distinct-date collect: a century of days.
+MAX_LOAD_DATES = 36_600
+
+
 def _day_ranges(days: list[dt.date]) -> list[tuple[dt.date, dt.date]]:
     """Group dates into sorted (begin, end) runs of consecutive days —
     the reference's walk over the sorted distinct dates
@@ -93,10 +99,13 @@ def load_report(
 
     The ranges come from one distinct aggregate over ``date_col`` cast
     to date, collected to the driver and grouped there: the collect
-    returns one row per distinct date (~365 rows per year loaded).
+    returns one row per distinct date (~365 rows per year loaded) and
+    raises :class:`~train_reports_etl_spark.driver.DriverBoundError`
+    past :data:`MAX_LOAD_DATES`.
     """
     days = df.select(F.col(date_col).cast("date").alias("d")).where("d IS NOT NULL").distinct()
-    ranges = [(str(a), str(b)) for a, b in _day_ranges([r.d for r in days.collect()])]
+    rows = bounded_collect(days, MAX_LOAD_DATES, "load_report distinct dates")
+    ranges = [(str(a), str(b)) for a, b in _day_ranges([r.d for r in rows])]
     if warn_non_consecutive and len(ranges) > 1:
         logging.getLogger(__name__).warning(
             "load_report: non-consecutive dates — %d ranges: %s", len(ranges), ranges

@@ -32,6 +32,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from train_reports_etl_spark.driver import local_frame
 from train_reports_etl_spark.operators.union import union_all
 from train_reports_etl_spark.sources import xlsx_lite
 from train_reports_etl_spark.sources.sniffer import PROBE_DEPTH, SniffResult, sniff_rows
@@ -196,7 +197,7 @@ def read_report(spark: SparkSession, refs: list[SheetRef]) -> DataFrame:
         ]
         schema = StructType([StructField(name, StringType(), True) for name in header])
         if not tasks:
-            frames.append(spark.createDataFrame([], schema))
+            frames.append(local_frame(spark, [], schema))
         else:
             rdd = spark.sparkContext.parallelize(tasks, len(tasks))
             frames.append(

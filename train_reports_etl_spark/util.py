@@ -111,3 +111,10 @@ def safe_col(name: str) -> Column:
     escape this in Spark 4.x — it parses too.
     """
     return F.col(f"`{name.replace('`', '``')}`")
+
+
+def sql_div(a: int, b: int) -> int:
+    """SQL ``a div b``: integer division truncating toward zero (Python
+    ``//`` floors, which differs for operands of opposite sign)."""
+    q = abs(a) // abs(b)
+    return q if (a < 0) == (b < 0) else -q
