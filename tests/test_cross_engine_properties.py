@@ -534,6 +534,57 @@ def test_simhash_pair_pipeline_identical_generated(spark, rows):
 
 @given(
     st.lists(
+        st.tuples(st.integers(0, 10**6), gen_text),
+        min_size=2,
+        max_size=10,
+        unique_by=lambda t: t[0],
+    )
+)
+@settings(**SETTINGS)
+def test_simhash16_path_identical_generated(spark, rows):
+    """The 16-bit SimHash is derived as ``simhash60 >> 44`` on Spark
+    and hashed on its own (4 md5 nibbles per token) by the DuckDB
+    oracle: both ``simhash_table`` vs ``_simhash_sql`` and the Hamming
+    <= 3 pair query vs the ``e2_simhash_near_dup`` oracle must agree on
+    generated docs plus fixed edge rows — zero-token docs (fingerprint
+    0 on both sides, a Hamming-0 pair) and duplicate texts."""
+    from train_reports_etl_spark.extensions.dedup import simhash_near_duplicates
+    from train_reports_etl_spark.extensions.ext_queries import _simhash_sql
+    from train_reports_etl_spark.extensions.text import simhash_table
+    from train_reports_etl_spark.plans.registry import ORACLES
+
+    base = 2 * 10**6
+    rows = rows + [
+        (base + 1, "real words here"),
+        (base + 2, "real words here"),
+        (base + 3, ""),
+        (base + 4, "!!! ... ???"),
+        (base + 5, rows[0][1]),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+
+    sh_spark = {(r.doc_id, r.simhash) for r in simhash_table(docs).collect()}
+    sh_duck = set(map(tuple, con.execute(_simhash_sql()).fetchall()))
+    assert sh_spark == sh_duck, rows
+    assert (base + 3, 0) in sh_spark and (base + 4, 0) in sh_spark
+
+    pairs_spark = {
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in simhash_near_duplicates(docs, max_hamming=3).collect()
+    }
+    pairs_duck = set(
+        map(tuple, con.execute(ORACLES["e2_simhash_near_dup"]).fetchall())
+    )
+    assert pairs_spark == pairs_duck, rows
+    dup_pairs = {(base + 1, base + 2, 0), (base + 3, base + 4, 0), (rows[0][0], base + 5, 0)}
+    assert dup_pairs <= pairs_spark
+
+
+@given(
+    st.lists(
         st.text(alphabet="theranoseri ", min_size=0, max_size=24),
         min_size=1,
         max_size=25,

@@ -22,7 +22,7 @@ from train_reports_etl_spark.extensions.similarity import (
     standardize_embeddings,
     topk_cosine,
 )
-from train_reports_etl_spark.extensions.text import simhash16
+from train_reports_etl_spark.extensions.text import simhash_table
 
 
 @pytest.fixture()
@@ -78,7 +78,7 @@ def test_near_dup_pipelines_release_their_caches(spark, docs):
 
 
 def test_simhash_identical_and_distance(docs):
-    sh = {r.doc_id: r.s for r in docs.select("doc_id", simhash16("text").alias("s")).collect()}
+    sh = {r.doc_id: r.simhash for r in simhash_table(docs).collect()}
     assert sh[3] == sh[4]                     # identical text -> identical simhash
     assert 0 <= sh[0] < 2**16
     got = {(r.doc_a, r.doc_b) for r in simhash_near_duplicates(docs, max_hamming=3).collect()}

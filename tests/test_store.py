@@ -182,6 +182,31 @@ def test_store_backed_paths_match_direct_compute(spark):
         store.clear()
 
 
+def test_prebuild_rows_are_exactly_the_built_stores(spark, monkeypatch):
+    """Every ``store:<name>`` row that ``prebuild_shared_stores`` times
+    must be a store ``shared`` actually keys, and every store it keys
+    must get a row: a row naming a projection of another store (the
+    16-bit SimHash is ``simhash60 >> 44``) would time a cache read as
+    if it were a build."""
+    from train_reports_etl_spark.extensions.ext_queries import prebuild_shared_stores
+
+    called = set()
+    real_shared = store.shared
+
+    def recording_shared(spark_, sf_dir, name, build, *params):
+        called.add(name)
+        return real_shared(spark_, sf_dir, name, build, *params)
+
+    monkeypatch.setattr(store, "shared", recording_shared)
+    try:
+        timings = prebuild_shared_stores(spark, SF_SMOKE)
+    finally:
+        store.clear()
+    assert set(timings) == called
+    assert "simhash16" not in timings and len(timings) == 10
+    assert all(secs >= 0 for secs in timings.values()), timings
+
+
 def test_incremental_lsh_signature_split_matches_internal(spark):
     """Passing pre-split signature-store frames into the incremental
     MinHash pipeline must reproduce the internally-computed result."""

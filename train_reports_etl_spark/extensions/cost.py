@@ -73,27 +73,17 @@ def estimate_simhash_pairs(
     """Cost of :func:`dedup.simhash_near_duplicates`: Σ C(m,2) over
     the 64 pigeonhole chunk buckets (4 chunks × 16 values). Pass the
     materialized ``fingerprints`` table to skip rehashing."""
-    from train_reports_etl_spark.extensions.dedup import bucket_pair_estimate
+    from train_reports_etl_spark.extensions.dedup import (
+        _simhash_chunk_explode,
+        bucket_pair_estimate,
+    )
     from train_reports_etl_spark.extensions.text import simhash_table
 
     if fingerprints is None:
         if df is None:
             raise ValueError("pass df or fingerprints")
         fingerprints = simhash_table(df, id_col, text_col)
-    sh = fingerprints.select(F.col("simhash").alias("sh"))
-    chunks = sh.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("chunk"),
-                        F.shiftright("sh", 4 * k).bitwiseAND(F.lit(0xF)).alias("cv"),
-                    )
-                    for k in range(4)
-                ]
-            )
-        ).alias("cc")
-    ).select("cc.chunk", "cc.cv")
+    chunks = _simhash_chunk_explode(fingerprints, id_col)
     est, rows = bucket_pair_estimate(chunks, ["chunk", "cv"])
     return _verdict("simhash_near_duplicates", est, rows, max_pairs)
 

@@ -197,7 +197,6 @@ def jaccard_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df_ratio: float = 1.0,
     shingle_width: int | None = 3,
     posting: DataFrame | None = None,
     prefix_filter: bool | str = "auto",
@@ -239,10 +238,6 @@ def jaccard_pairs(
     with identical rows either way. Pass an explicit bool to skip the
     one-aggregate decision scan.
 
-    ``max_df_ratio`` drops set elements appearing in more than that
-    fraction of docs before the join — document-frequency pruning, the
-    standard guard when approximate recall is acceptable (prefix
-    filtering is the exact alternative). Default 1.0 = exact.
     Output: (doc_a < doc_b, jaccard).
 
     The posting table comes from :func:`shingle_posting` (codegen
@@ -263,11 +258,6 @@ def jaccard_pairs(
     posting = _as_token_posting(df, id_col, text_col, shingle_width, posting)
     if digest_keys:
         posting = _digest_tokens(posting)
-    if max_df_ratio < 1.0:
-        n_docs = df.count()
-        doc_freq = posting.groupBy("tok").agg(F.count("*").alias("df"))
-        keep_toks = doc_freq.filter(F.col("df") <= int(max_df_ratio * n_docs)).select("tok")
-        posting = posting.join(F.broadcast(keep_toks), "tok")
     jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
     if resolve_prefix_filter(posting, prefix_filter, caller="jaccard_pairs"):
         # min overlap each side must reach relative to its OWN size;
@@ -686,6 +676,28 @@ def _neighbor_window_candidates(
     return probes.join(build, [*keys, "__rn"]).drop("__rn")
 
 
+def _simhash_chunk_explode(fingerprints: DataFrame, id_col: str) -> DataFrame:
+    """(id, sh, chunk, cv) rows — one per 4-bit chunk of each 16-bit
+    ``simhash``: the pigeonhole bucket key of
+    :func:`simhash_near_duplicates` and of its cost estimate
+    (``cost.estimate_simhash_pairs``)."""
+    return fingerprints.select(
+        F.col(id_col).alias("id"),
+        F.col("simhash").alias("sh"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(k).alias("chunk"),
+                        F.shiftright("simhash", 4 * k).bitwiseAND(F.lit(0xF)).alias("cv"),
+                    )
+                    for k in range(4)
+                ]
+            )
+        ).alias("cc"),
+    ).select("id", "sh", "cc.chunk", "cc.cv")
+
+
 def simhash_near_duplicates(
     df: DataFrame,
     max_hamming: int = 3,
@@ -727,7 +739,7 @@ def simhash_near_duplicates(
     concentrates on the closest pairs — and the decision + estimate
     are logged. ``None`` disables the guard.
     """
-    from train_reports_etl_spark.extensions.text import hamming16, simhash_table
+    from train_reports_etl_spark.extensions.text import simhash_table
 
     if not 0 <= max_hamming < 4:
         raise ValueError(
@@ -737,16 +749,7 @@ def simhash_near_duplicates(
     owns_cache = fingerprints is None
     if fingerprints is None:
         fingerprints = simhash_table(df, id_col, text_col).persist()
-    sh = fingerprints.select(
-        F.col(id_col).alias("id"), F.col("simhash").alias("sh")
-    )
-    chunks = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(*[F.struct(F.lit(k).alias("chunk"), F.shiftright("sh", 4 * k).bitwiseAND(F.lit(0xF)).alias("cv")) for k in range(4)])
-        ).alias("cc"),
-    ).select("id", "sh", "cc.chunk", "cc.cv")
+    chunks = _simhash_chunk_explode(fingerprints, id_col)
     saturated = False
     if max_pairs is not None:
         est, chunk_rows = bucket_pair_estimate(chunks, ["chunk", "cv"])
@@ -779,7 +782,7 @@ def simhash_near_duplicates(
             .select(F.col("a.id").alias("doc_a"), F.col("a.sh").alias("sh_a"), F.col("b.id").alias("doc_b"), F.col("b.sh").alias("sh_b"))
         )
     pairs = (
-        cands.withColumn("hamming", hamming16(F.col("sh_a"), F.col("sh_b")))
+        cands.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         # canonical unordered orientation: the rank-window sample pairs
         # in (sh, id) order, not id order — least/greatest unifies both

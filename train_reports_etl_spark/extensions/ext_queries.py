@@ -29,7 +29,7 @@ from train_reports_etl_spark.extensions.text import (
     STOPWORDS,
     fingerprint_md5,
     quality_metrics,
-    simhash_table,
+    simhash16_of,
     token_count,
 )
 from train_reports_etl_spark.plans.registry import bench_query, query
@@ -301,8 +301,9 @@ def _simhash_body_sql(bits: int, val: str, out_cast: str, out_col: str) -> str:
     final ``sh`` CTE LEFT JOINs from documents so zero-token docs KEEP
     a fingerprint of 0 — matching the Spark side's ``explode_outer``
     (UNNEST of an empty token list would silently drop them; NULL
-    weights fall through every CASE to bit 0). One builder so the two
-    widths cannot drift on tie/NULL semantics."""
+    weights fall through every CASE to bit 0). The 16-bit twin hashes
+    its tokens on its own (4 md5 nibbles), so the gate checks the Spark
+    side's ``simhash60 >> 44`` derivation rather than sharing it."""
     bit_weights = ", ".join(
         f"SUM(CASE WHEN (v & {1 << b}) != 0 THEN 1 ELSE -1 END) AS w{b}" for b in range(bits)
     )
@@ -320,7 +321,7 @@ def _simhash_body_sql(bits: int, val: str, out_cast: str, out_col: str) -> str:
 
 
 def _simhash_sql() -> str:
-    """DuckDB twin of ``simhash16`` + chunked near-dup join."""
+    """DuckDB twin of ``text.simhash_table`` + chunked near-dup join."""
     nib = "(strpos('0123456789abcdef', {c}) - 1)"
     val = " + ".join(
         f"{nib.format(c=f'substring(md5(t), {i + 1}, 1)')} * {16 ** (3 - i)}" for i in range(4)
@@ -333,23 +334,17 @@ def _simhash_sql() -> str:
 @query("e2_simhash_fingerprints", _simhash_sql())
 def e2_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 — 16-bit md5-based SimHash per document (oracle-checked bit
-    for bit against a pure-SQL reimplementation). Uses the explode+agg
-    table form — the column-expression form re-hashes every token 16×."""
-    return _shared_simhash_table(spark, sf_dir).select("doc_id", "simhash")
+    for bit against a pure-SQL 16-bit reimplementation). The top 16
+    bits of the shared 60-bit SimHash store."""
+    return _shared_simhash_table(spark, sf_dir)
 
 
 def _shared_simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized (doc_id, simhash) signature table — shared by the
-    fingerprint dump and the near-dup pair query (see
-    extensions/store.py)."""
-    from train_reports_etl_spark.extensions.store import shared
-
-    return shared(
-        spark,
-        sf_dir,
-        "simhash16",
-        lambda: simhash_table(load_table(spark, sf_dir, "documents")),
-    )
+    """(doc_id, simhash) — the 16-bit fingerprint, shared by the
+    fingerprint dump and the near-dup pair query. A projection of the
+    ``simhash60`` store, not a store of its own: it costs no corpus
+    scan."""
+    return simhash16_of(_shared_simhash60_table(spark, sf_dir))
 
 
 @query(
@@ -8565,8 +8560,9 @@ def _shared_simhash60_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized (doc_id, simhash60) signature table — shared by the
     two Hamming-join gate queries (pair d=6 and MIH d=7), which
     otherwise each re-ran the 60-bit explode/hash/60-sum aggregate
-    (r10; same write-once-signature design as simhash16/winnow_fps —
-    see extensions/store.py)."""
+    (r10; same write-once-signature design as winnow_fps — see
+    extensions/store.py), and by the 16-bit SimHash rows through
+    :func:`_shared_simhash_table`."""
     from train_reports_etl_spark.extensions.store import shared
     from train_reports_etl_spark.extensions.text import simhash60_table
 
@@ -8659,7 +8655,6 @@ def prebuild_shared_stores(
     from train_reports_etl_spark.extensions.store import shared
 
     builders: dict[str, object] = {
-        "simhash16": lambda: _shared_simhash_table(spark, sf_dir),
         "simhash60": lambda: _shared_simhash60_table(spark, sf_dir),
         "phash64": lambda: _shared_phash_table(spark, sf_dir),
         "winnow_fps": lambda: _shared_winnow_fps(spark, sf_dir),

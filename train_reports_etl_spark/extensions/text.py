@@ -170,7 +170,7 @@ def lang_count_table(
 ) -> DataFrame:
     """Marker counts per language as a DataFrame transform: tokenize
     ONCE per row, explode, and count every language's markers in one
-    codegen hash-agg pass (the :func:`simhash_table` shape).
+    codegen hash-agg pass (the :func:`simhash60_table` shape).
 
     Per-word count columns would re-run the tokenizer regex once per
     marker (15×/row here) inside interpreted ``F.filter`` HOFs.
@@ -312,12 +312,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalize_for_fingerprint(text))
 
 
-def _nib(c: Column) -> Column:
-    """hex char → 0..15 via position in '0123456789abcdef' — portable
-    across engines (no hex-literal casts)."""
-    return (F.instr(F.lit("0123456789abcdef"), c) - 1).cast("int")
-
-
 # --- rolling-hash fingerprinting (Rabin-Karp / winnowing) -------------
 #
 # All arithmetic mod ROLL_MOD with ROLL_BASE keeps every intermediate
@@ -330,10 +324,10 @@ ROLL_MOD = (1 << 31) - 1
 
 def token_value16(tok: Column) -> Column:
     """Portable 16-bit token value: first 4 md5 nibbles (md5 is
-    bit-identical across Spark/DuckDB; see simhash). Spark decodes via
-    ``conv`` — one parse instead of 4 instr/substring terms, bit-equal
-    (exact base-16 parse); oracles keep the instr chain (no DuckDB
-    conv)."""
+    bit-identical across Spark/DuckDB), i.e. ``sketches.hash60 >> 44``.
+    Spark decodes via ``conv`` — one parse instead of 4 instr/substring
+    terms, bit-equal (exact base-16 parse); oracles keep the instr
+    chain (no DuckDB conv)."""
     return F.conv(F.substring(F.md5(tok), 1, 4), 16, 10).cast("long")
 
 
@@ -411,106 +405,60 @@ def winnowed_fingerprints(
     return keep.select("id", "fp").distinct()
 
 
-def simhash_table(df, id_col: str = "doc_id", text_col: str = "text"):
-    """16-bit SimHash as a DataFrame transform: explode tokens, hash
-    each token ONCE, aggregate the 16 bit-weights as conditional sums.
+def simhash60_table(df, id_col: str = "doc_id", text_col: str = "text"):
+    """60-bit SimHash as a DataFrame transform: explode tokens, hash
+    each token ONCE with ``hash60`` (15 md5 nibbles — the
+    engine-portable 60-bit hash), aggregate the 60 bit-weights as
+    conditional sums in one codegen hash-agg, shuffling one row per
+    doc. Zero-token docs are KEPT (explode_outer emits one NULL token;
+    every weight sums to −1; fingerprint 0) — the SQL twins mirror
+    this with a LEFT JOIN from documents.
 
-    Prefer this over the column-level :func:`simhash16` on real data:
-    the column form's 16 ``aggregate`` HOFs each re-evaluate the token
-    md5 pipeline (16× hashing) and run outside codegen; this form is
-    one explode + one codegen hash-agg, shuffling one row per doc.
-    Returns (id_col, simhash int).
-    """
-    return _simhash_agg_table(
-        df, id_col, text_col, bits=16, value_fn=token_value16,
-        out_col="simhash", out_type="int",
-    )
+    60 bits stay strictly below 2^63, so the value is non-negative on
+    both engines and DuckDB's arithmetic ``>>`` equals Spark's
+    ``shiftrightunsigned`` in the downstream 8-chunk pigeonhole join
+    (``multimodal.hamming_pairs_64``) — a SQL-derivable stand-in for
+    the numpy pHash that lets the candidate+verify pair stage be
+    strong-oracle-checked. Returns (id_col, simhash60 bigint)."""
+    from train_reports_etl_spark.extensions.sketches import hash60
 
-
-def _simhash_agg_table(df, id_col, text_col, bits, value_fn, out_col, out_type):
-    """Shared explode/agg SimHash generator: one token explode, one
-    hash per token via ``value_fn``, ``bits`` conditional bit-weight
-    sums, majority-threshold fingerprint. Zero-token docs are KEPT
-    (explode_outer emits one NULL token; every weight sums to −1;
-    fingerprint 0) — the SQL twins mirror this with a LEFT JOIN from
-    documents. One implementation so the 16-bit and 60-bit variants
-    (and their oracles) cannot drift on tie/NULL semantics."""
     toked = df.select(F.col(id_col), F.explode_outer(tokens(text_col)).alias("t"))
-    valued = toked.select(id_col, value_fn(F.col("t")).alias("v"))
+    valued = toked.select(id_col, hash60(F.col("t")).alias("v"))
     weights = valued.groupBy(id_col).agg(
         *[
             F.sum(
                 F.when(F.col("v").bitwiseAND(F.lit(1 << b)) != 0, 1).otherwise(-1)
             ).alias(f"w{b}")
-            for b in range(bits)
+            for b in range(60)
         ]
     )
     fp = sum(
-        (F.when(F.col(f"w{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(bits)),
+        (F.when(F.col(f"w{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(60)),
         F.lit(0),
     )
-    return weights.select(F.col(id_col), fp.cast(out_type).alias(out_col))
+    return weights.select(F.col(id_col), fp.cast("long").alias("simhash60"))
 
 
-def simhash60_table(df, id_col: str = "doc_id", text_col: str = "text"):
-    """60-bit SimHash in the same explode/agg shape as
-    :func:`simhash_table`, with ``hash60`` (15 md5 nibbles — the
-    engine-portable 60-bit hash) as the per-token value. 60 bits stay
-    strictly below 2^63, so the value is non-negative on both engines
-    and DuckDB's arithmetic ``>>`` equals Spark's
-    ``shiftrightunsigned`` in the downstream 8-chunk pigeonhole join
-    (``multimodal.hamming_pairs_64``) — that is the point: a
-    SQL-derivable stand-in for the numpy pHash that lets the
-    candidate+verify pair stage be strong-oracle-checked.
-    Returns (id_col, simhash60 bigint)."""
-    from train_reports_etl_spark.extensions.sketches import hash60
-
-    return _simhash_agg_table(
-        df, id_col, text_col, bits=60, value_fn=hash60,
-        out_col="simhash60", out_type="long",
+def simhash16_of(sh60: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The 16-bit SimHash projected from a :func:`simhash60_table`
+    frame: its top 16 bits. ``token_value16`` is the first 4 md5
+    nibbles and ``hash60`` the first 15, so bit b of the 16-bit token
+    value is bit b+44 of the 60-bit one; every bit-weight sum, tie
+    and zero-token fingerprint then agrees, and ``simhash60 >> 44``
+    IS the 16-bit fingerprint — no second explode/hash/aggregate.
+    Returns (id_col, simhash int)."""
+    return sh60.select(
+        F.col(id_col), F.shiftright("simhash60", 44).cast("int").alias("simhash")
     )
 
 
-def simhash16(text: Column | str) -> Column:
-    """E2 — 16-bit SimHash over tokens, md5-based.
-
-    For each token take the first 16 bits of md5 (4 hex nibbles →
-    integer); each bit contributes +1 if set else −1; fingerprint bit b
-    is 1 iff the summed weight is positive. Small width keeps the
-    DuckDB oracle cheap while exercising the full SimHash shape; widen
-    by changing ``bits``.
-    """
-    toks = tokens(text)
-    hex4 = F.transform(toks, lambda t: F.substring(F.md5(t), 1, 4))
-    vals = F.transform(
-        hex4,
-        lambda h: (
-            _nib(F.substring(h, 1, 1)) * 4096
-            + _nib(F.substring(h, 2, 1)) * 256
-            + _nib(F.substring(h, 3, 1)) * 16
-            + _nib(F.substring(h, 4, 1))
-        ),
-    )
-    # NB: the merge lambda must take exactly (acc, v) — pyspark passes
-    # one Column per declared parameter, so extra default args break.
-    def bit_merge(mask: int):
-        return lambda s, v: s + F.when(v.bitwiseAND(F.lit(mask)) != 0, F.lit(1)).otherwise(F.lit(-1))
-
-    bits = 16
-    acc = F.lit(0).cast("int")
-    for b in range(bits):
-        weight = F.aggregate(vals, F.lit(0).cast("int"), bit_merge(1 << b))
-        acc = acc + F.when(weight > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return acc.cast("int")
-
-
-def hamming16(a: Column, b: Column) -> Column:
-    """Hamming distance between two 16-bit simhashes (popcount of XOR)."""
-    x = a.bitwiseXOR(b)
-    return sum(
-        (F.when(x.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(0) for i in range(16)),
-        F.lit(0),
-    ).cast("int")
+def simhash_table(df, id_col: str = "doc_id", text_col: str = "text"):
+    """E2 — 16-bit md5-based SimHash per document: token bit b is bit b
+    of ``token_value16``; fingerprint bit b is 1 iff the summed ±1
+    weight is positive. Computed as the top 16 bits of
+    :func:`simhash60_table` (see :func:`simhash16_of`).
+    Returns (id_col, simhash int)."""
+    return simhash16_of(simhash60_table(df, id_col, text_col), id_col)
 
 
 # --------------------------------------------------------------- E4 PII
