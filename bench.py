@@ -2,9 +2,14 @@
 (default /root/testdata/sf0.1) and prints ONE JSON line with per-query and
 total wall-clock seconds.
 
-Each query is materialized via a count-collapsing action
-(``df.write.format("noop")`` when available, else ``count``) so timings
-measure full plan execution, not driver-side collection of wide rows.
+    python bench.py [--repeat N] [row ...]
+
+Each query is materialized with the ``noop`` sink, so timings measure
+full plan execution, not driver-side collection of wide rows. Named
+rows (query names or ``store:<name>``) run only those rows, with the
+same warm-up, store prebuild, calibration and spans as the full suite;
+each prints one JSON line (median, per-pass walls, trace map) and
+BENCH_FULL.json is left as it is.
 
 Noise control (BASELINE.md documents ±3× single-run tail noise on this
 host): ``--repeat N`` (default 3, env ``SPARK_GRAFT_BENCH_REPEAT``) runs
@@ -16,9 +21,19 @@ rows so their one-time build cost stops migrating between whichever
 consumer query runs first (r05: e1_dedup_provenance 1.3→6.1 s purely
 from store first-touch).
 
-Shuffle accounting: each query's per-pass delta of the app-cumulative
-shuffle-write byte counter (AppStatusStore) is recorded as a median
-``shuffle_mb`` map in BENCH_FULL.json — wall-time at sf0.1 hides
+Tracing (always on): every query row runs as two ``perfbench/spans.py``
+spans, ``construct`` (``fn(spark, sf_dir)``) and ``execute`` (the noop
+write); its wall is the sum of the two span times, and the span
+statistics are read after each span closes, outside that time. Stream
+micro-batches run under their query's run id, not the span's job
+group; a ``StreamProgress`` listener supplies those run ids and the
+row's stream jobs are read by them. Each store build runs in one
+``store:<name>`` span. BENCH_FULL.json carries per row a ``trace`` map
+(median over kept passes of construct/execute/stream jobs, stages,
+executor run and CPU seconds, spill MiB, stream batches), the median
+shuffle-write ``shuffle_mb`` (10^6 bytes, summed over the row's
+construct, execute and stream jobs) and ``trace_overhead_s``, the time
+spent opening, closing and reading spans. Wall time at sf0.1 hides
 shuffle-volume regressions that dominate at cluster scale.
 
 Host-speed calibration (VERDICT r08 #1): identical-code suite sums
@@ -40,10 +55,22 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.append(os.path.join(HERE, "perfbench"))
 
 import __spark_entry__ as entrymod
-from train_reports_etl_spark.session import get_spark
+from spans import MB, StreamProgress, Tracer, replaced, stream_stats
+from train_reports_etl_spark.session import DEFAULT_CPUS, configure
+
+#: Stage records the status store keeps. A span's stages are read as
+#: soon as it ends, but the store's cleanup (every retainedStages/10
+#: stage writes past the limit) evicts SKIPPED stages first, since they
+#: have no completion time; with Spark's default of 1000, a cleanup
+#: between a job's end and the read made the read fail on 3 rows of one
+#: sf0.01 pass. No run of these tools reaches this many stages, so no
+#: cleanup happens.
+RETAINED_STAGES = 100_000
 
 
 #: 1 MiB of fixed bytes — the calibration unit. The WORK is a constant
@@ -81,47 +108,105 @@ def host_calibration() -> dict:
     return {"single_core_hash_sec": single, "multi_core_hash_sec": multi}
 
 
-def run_query(df) -> int:
-    """Execute the full plan; noop sink avoids toPandas/collect overhead
-    while still computing every output row."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-        return -1
-    except Exception:  # noqa: BLE001 — noop source unavailable
-        return df.count()
+def session(app_name: str):
+    """The engine's configured local session, keeping every stage record."""
+    from pyspark.sql import SparkSession
+
+    builder = configure(SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").appName(app_name))
+    return builder.config("spark.ui.retainedStages", str(RETAINED_STAGES)).getOrCreate()
 
 
-def shuffle_write_bytes(spark) -> int:
-    """Cumulative shuffle-write bytes for the whole app, from the
-    AppStatusStore's per-EXECUTOR totals (works with spark.ui disabled
-    — the store backs the status API, not just the UI). Per-query
-    deltas of this counter expose shuffle-VOLUME regressions that
-    sf0.1 wall-time hides but that dominate at cluster scale.
+def run_query(df) -> None:
+    """Execute the full plan; the noop sink computes every output row
+    without bringing any of them to the driver."""
+    df.write.format("noop").mode("overwrite").save()
 
-    Executor totals, NOT a stageList scan: the stage list grows with
-    every pass and its per-stage py4j round-trips made the probe
-    O(total stages) — measured ~2× on the r07 suite's all-passes wall
-    (570 → 1182 s) before this switch; executorList is one element
-    per executor, ~2 ms flat, and immune to stage-retention eviction.
 
-    Best-effort: returns -1 when the store API is unavailable so the
-    bench still runs — but WARNS (once) on stderr, per this module's
-    no-silent-coverage-drop policy: a py4j signature drift would
-    otherwise just make shuffle_mb vanish from BENCH_FULL.json."""
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        execs = store.executorList(False)  # False = include dead executors
-        return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
-    except Exception as e:  # noqa: BLE001 — py4j surface drift
-        if not getattr(shuffle_write_bytes, "_warned", False):
-            shuffle_write_bytes._warned = True
-            print(
-                f"bench: shuffle accounting unavailable ({e!r}) — "
-                "shuffle_mb will be empty in BENCH_FULL.json",
-                file=sys.stderr,
-            )
-        return -1
+#: Keys of a query row's trace map, each a median over the kept passes.
+TRACE_KEYS = (
+    "construct_jobs", "execute_jobs", "stream_jobs", "stages",
+    "executor_run_s", "executor_cpu_s", "spill_mb", "batches",
+)
+_SUMMED = ("stages", "executor_run_s", "executor_cpu_s", "spill_mb")
+
+
+def traced_row(tracer: Tracer, progress: StreamProgress, spark, sf_dir: str, fn, action=run_query):
+    """Build ``fn``'s frame in a ``construct`` span and run ``action``
+    on it in an ``execute`` span. Returns the action's result and the
+    row's record: ``wall`` (the two span times), the trace keys, the
+    shuffle-write bytes of all the row's jobs, and the stream figures
+    of ``stream_stats`` (``state_rows``, ``state_mb``)."""
+    reader = tracer.reader
+    progress.run_ids.clear()
+    progress.batches.clear()
+    first = reader.jobs_submitted()
+    with tracer.span("construct", "plans") as c:
+        df = fn(spark, sf_dir)
+    with tracer.span("execute", "plans") as e:
+        result = action(df)
+    t0 = time.perf_counter()
+    last = reader.jobs_submitted()
+    stream = stream_stats(reader, progress, first, last)
+    s = reader.stats([j for rid in progress.run_ids for j in reader.group_jobs(rid, first, last)])
+    tracer.overhead_s += time.perf_counter() - t0
+    parts = (c.stats, e.stats, s)
+    return result, {
+        "wall": c.seconds + e.seconds,
+        "construct_jobs": c.stats["jobs"],
+        "execute_jobs": e.stats["jobs"],
+        "stream_jobs": s["jobs"],
+        **{k: sum(p[k] for p in parts) for k in _SUMMED},
+        "shuffle_bytes": round(sum(p["shuffle_write_mb"] for p in parts) * MB),
+        "batches": stream["batches"],
+        "state_rows": stream["state_rows"],
+        "state_mb": stream["state_mb"],
+    }
+
+
+def traced_stores(spark, sf_dir: str, tracer: Tracer, probes_out: list) -> dict[str, tuple[float, dict | None]]:
+    """Build every shared signature store, each fresh build in its own
+    ``store:<name>`` span. Returns name -> (seconds, trace): the span's
+    time and statistics, or the prebuild's time and None for a store
+    that failed or was served from earlier work."""
+    from train_reports_etl_spark.extensions import store
+    from train_reports_etl_spark.extensions.ext_queries import prebuild_shared_stores
+
+    shared = store.shared
+    built = {}  # store name -> the span of its build
+
+    def observed(spark_, sf_dir_, name, build, *params):
+        if name in built:
+            return shared(spark_, sf_dir_, name, build, *params)
+        fresh = []
+
+        def build_once():
+            fresh.append(name)
+            return build()
+
+        # The store persists lazily; counting the new frame fills it
+        # here, so the build's jobs run inside its own span.
+        with tracer.span(f"store:{name}", "extensions") as sp:
+            df = shared(spark_, sf_dir_, name, build_once, *params)
+            if fresh:
+                df.count()
+                built[name] = sp
+        return df
+
+    with replaced(shared, observed, "train_reports_etl_spark"):
+        timings = prebuild_shared_stores(spark, sf_dir, probe=host_calibration, probes_out=probes_out)
+    out = {}
+    for name, secs in timings.items():
+        sp = built.get(name)
+        if secs < 0 or sp is None:
+            out[name] = (secs, None)
+        else:
+            trace = {"build_jobs": sp.stats["jobs"], **{k: sp.stats[k] for k in _SUMMED}}
+            out[name] = (round(sp.seconds, 3), _rounded(trace))
+    return out
+
+
+def _rounded(d: dict) -> dict:
+    return {k: round(v, 3) for k, v in d.items()}
 
 
 def select_clean_passes(
@@ -144,36 +229,52 @@ def select_clean_passes(
     return ok if ok else list(range(n))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     try:
         repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3"))
     except ValueError:
         print("SPARK_GRAFT_BENCH_REPEAT must be an integer", file=sys.stderr)
         raise SystemExit(2)
-    if "--repeat" in sys.argv:
+    if "--repeat" in args:
+        i = args.index("--repeat")
         try:
-            repeat = int(sys.argv[sys.argv.index("--repeat") + 1])
+            repeat = int(args[i + 1])
         except (IndexError, ValueError):
-            print("usage: bench.py [--repeat N]", file=sys.stderr)
+            print("usage: bench.py [--repeat N] [row ...]", file=sys.stderr)
             raise SystemExit(2)
-    repeat = max(1, repeat)
+        args = args[:i] + args[i + 2:]
     # Calibration BEFORE the session exists (no JVM background load)
     # and again after the suite — the pair brackets the run, so a host
     # window that shifts MID-suite is visible as begin/end divergence.
     calibration = {"begin": host_calibration()}
-    # Executor-total shuffle accounting is immune to stage-retention
-    # eviction, so the plain pinned session suffices.
-    spark = get_spark("bench")
+    spark = session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    try:
+        run(spark, sf_dir, max(1, repeat), args, calibration)
+    finally:
+        spark.stop()
+
+
+def run(spark, sf_dir: str, repeat: int, names: list[str], calibration: dict) -> None:
+    """Run the suite, or only the named rows, ``repeat`` times. The
+    full suite writes BENCH_FULL.json and prints the summary line; a
+    named subset prints one line per row and writes nothing."""
+    import statistics
+
+    from train_reports_etl_spark.plans.registry import BENCH_ONLY
 
     qs = entrymod.queries()
     # Bench-only throughput twins (e.g. the xxhash64 MinHash path whose
     # correctness is covered by its portable md5 twin in the gate).
-    from train_reports_etl_spark.plans.registry import BENCH_ONLY
-
     qs = {**qs, **BENCH_ONLY}
+    if names:
+        unknown = [n for n in names if n not in qs and not n.startswith("store:")]
+        if unknown:
+            print(f"bench: unknown rows: {unknown}", file=sys.stderr)
+            raise SystemExit(2)
+        qs = {n: fn for n, fn in qs.items() if n in names}
     # Warm the JVM/session on the smallest sf so per-query numbers
     # reflect execution, not session spin-up.
     try:
@@ -191,7 +292,11 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         pass
 
+    tracer = Tracer(spark, "bench", enabled=True)
+    progress = StreamProgress()
+    spark.streams.addListener(progress)
     timings: dict[str, float] = {}
+    traces: dict[str, dict] = {}
     t_suite = time.time()
     # Dedicated store-build rows: one-time signature-store cost, timed
     # once (NOT medianed — later passes would read the cache).
@@ -204,41 +309,35 @@ def main() -> None:
     store_probes: list[dict] = []
     store_names: list[str] = []
     try:
-        from train_reports_etl_spark.extensions.ext_queries import (
-            prebuild_shared_stores,
-        )
-
-        for sname, secs in prebuild_shared_stores(
-            spark, sf_dir, probe=host_calibration, probes_out=store_probes
-        ).items():
+        for sname, (secs, trace) in traced_stores(spark, sf_dir, tracer, store_probes).items():
             timings[f"store:{sname}"] = secs
+            if trace is not None:
+                traces[f"store:{sname}"] = trace
             store_names.append(sname)
     except Exception as e:  # noqa: BLE001
         print(f"bench: store prebuild failed: {e}", file=sys.stderr)
 
     runs: dict[str, list[float]] = {name: [] for name in qs}
-    shuffle_runs: dict[str, list[float | None]] = {name: [] for name in qs}
+    # one record per pass, None for a failed pass
+    records: dict[str, list[dict | None]] = {name: [] for name in qs}
     pass_cals = [calibration["begin"]]
-    for _pass in range(repeat):
-        for name, fn in qs.items():
-            sb0 = shuffle_write_bytes(spark)
-            t0 = time.time()
-            try:
-                run_query(fn(spark, sf_dir))
-                runs[name].append(round(time.time() - t0, 3))
-                sb1 = shuffle_write_bytes(spark)
-                shuffle_runs[name].append(
-                    round((sb1 - sb0) / 1e6, 3) if sb0 >= 0 and sb1 >= 0 else None
-                )
-            except Exception as e:  # noqa: BLE001
-                runs[name].append(-1.0)
-                shuffle_runs[name].append(None)
-                print(f"bench: {name} failed: {e}", file=sys.stderr)
-        # calibration probe at every pass BOUNDARY (begin + after each
-        # pass): a noisy-neighbor burst confined to one pass is then
-        # measurable, not just inferable from begin/end divergence.
-        pass_cals.append(host_calibration())
-    import statistics
+    try:
+        for _pass in range(repeat):
+            for name, fn in qs.items():
+                try:
+                    _, rec = traced_row(tracer, progress, spark, sf_dir, fn)
+                    runs[name].append(round(rec["wall"], 3))
+                    records[name].append(rec)
+                except Exception as e:  # noqa: BLE001
+                    runs[name].append(-1.0)
+                    records[name].append(None)
+                    print(f"bench: {name} failed: {e}", file=sys.stderr)
+            # calibration probe at every pass BOUNDARY (begin + after each
+            # pass): a noisy-neighbor burst confined to one pass is then
+            # measurable, not just inferable from begin/end divergence.
+            pass_cals.append(host_calibration())
+    finally:
+        spark.streams.removeListener(progress)
 
     # Burst filter (measured, never guessed): a pass whose BOTH
     # boundary probes sit within 1.5x of the best multi-core probe is
@@ -270,28 +369,45 @@ def main() -> None:
         )
     # Median per-query shuffle-write MB (stable across passes modulo
     # AQE decisions); tracked so a plan change that keeps wall-time flat
-    # at sf0.1 but multiplies shuffled bytes is caught mechanically.
-    # The delta brackets the app-cumulative counter in wall time, so
-    # the attribution is only sound for this single-threaded bench; a
-    # query that failed some passes would also have fewer shuffle
-    # samples than timing samples. Both caveats are made VISIBLE:
+    # at sf0.1 but multiplies shuffled bytes is caught mechanically. A
+    # query that failed some passes has fewer samples than passes:
     # shuffle_samples records the per-query sample count, and a query
-    # with partial coverage (fewer samples than passes) is excluded
-    # from shuffle_mb rather than medianed over a silent subset.
-    kept_shuffle = {
-        name: [vals[i] for i in used_idx if i < len(vals)]
-        for name, vals in shuffle_runs.items()
+    # with partial coverage is excluded from shuffle_mb rather than
+    # medianed over a silent subset. The trace map is medianed over the
+    # kept passes that succeeded.
+    kept_records = {
+        name: [recs[i] for i in used_idx if i < len(recs)]
+        for name, recs in records.items()
     }
     shuffle_samples = {
-        name: sum(1 for v in vals if v is not None)
-        for name, vals in kept_shuffle.items()
+        name: sum(1 for r in recs if r is not None)
+        for name, recs in kept_records.items()
     }
     shuffle_mb = {
-        name: round(statistics.median([v for v in vals if v is not None]), 3)
-        for name, vals in kept_shuffle.items()
-        if vals and all(v is not None for v in vals)
+        name: round(statistics.median(r["shuffle_bytes"] for r in recs) / 1e6, 3)
+        for name, recs in kept_records.items()
+        if recs and all(r is not None for r in recs)
     }
+    for name, recs in kept_records.items():
+        ok_recs = [r for r in recs if r is not None]
+        if ok_recs:
+            traces[name] = _rounded(
+                {k: statistics.median(r[k] for r in ok_recs) for k in TRACE_KEYS}
+            )
     wall_all_passes = round(time.time() - t_suite, 3)
+    trace_overhead_s = round(tracer.overhead_s, 3)
+
+    if names:
+        for name in names:
+            print(json.dumps({
+                "row": name,
+                "median": timings.get(name, -1.0),
+                "runs": runs.get(name, [timings.get(name, -1.0)]),
+                "shuffle_mb": shuffle_mb.get(name),
+                "trace": traces.get(name),
+            }, separators=(",", ":")))
+        return
+
     calibration["end"] = pass_cals[-1]
     calibration["passes"] = pass_cals
     # Per-store clean/dirty verdicts against the best multi-core probe
@@ -324,6 +440,7 @@ def main() -> None:
             >= 1.5 * best_multi
         ]
     calibration["store_dirty"] = store_dirty
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     total = round(sum(v for v in timings.values() if v >= 0), 3)
 
     # The driver captures only the last ~2000 chars of stdout and parses
@@ -355,6 +472,7 @@ def main() -> None:
         "sf": sf,
         "repeat": repeat,
         "wall_all_passes": wall_all_passes,
+        "trace_overhead_s": trace_overhead_s,
         "n_queries": len(qt),
         "n_stores": len(timings) - len(qt),
         "n_failed": sum(1 for v in qt.values() if v < 0),
@@ -367,17 +485,17 @@ def main() -> None:
         "calibration": calibration,
         "queries": {},
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+    with open(os.path.join(HERE, "BENCH_FULL.json"), "w") as f:
         json.dump(
             dict(
                 payload,
                 queries=timings,
                 shuffle_mb=shuffle_mb,
                 # sample count per query — partial coverage (failed
-                # passes or counter unavailability) is visible instead
-                # of laundering through a smaller median
+                # passes) is visible instead of laundering through a
+                # smaller median
                 shuffle_samples=shuffle_samples,
+                trace=traces,
                 # boundary probes around each store build (store i sits
                 # between probes i and i+1); store_dirty in calibration
                 # names the builds bracketed by a >=1.5x-slow probe
@@ -417,7 +535,6 @@ def main() -> None:
             break
     payload["queries_omitted"] = len(timings) - len(payload["queries"])
     print(json.dumps(payload, separators=(",", ":")))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -11,11 +11,6 @@ from train_reports_etl_spark.extensions.dedup import (
     minhash_near_duplicates,
     simhash_near_duplicates,
 )
-from train_reports_etl_spark.extensions.multimodal import (
-    documents_as_assets,
-    extract_features,
-    frame_sample_plan,
-)
 from train_reports_etl_spark.extensions.similarity import (
     cosine_near_duplicates,
     ivf_topk_cosine,
@@ -116,20 +111,6 @@ def test_cosine_near_duplicates_blocked(vectors):
     assert pairs == {(0, 1)}   # (0,3) blocked away (different label), (0,2) below threshold
 
 
-def test_multimodal_feature_extraction(spark):
-    docs = spark.createDataFrame([(0, "abc"), (1, "abcdef"), (2, "x" * 2500)], ["doc_id", "text"])
-    assets = documents_as_assets(docs)
-    feats = {r.asset_id: r for r in extract_features(assets).collect()}
-    assert feats[0].n_bytes == 3 and feats[1].n_bytes == 6
-    assert feats[0].width == 4 and feats[0].height == 22  # 3%1920+1, 21%1080+1
-    import hashlib
-
-    assert feats[0].checksum == hashlib.md5(b"abc").hexdigest()
-    plan = frame_sample_plan(assets, every_n_bytes=1000)
-    per_asset = {r.asset_id: r.cnt for r in plan.groupBy("asset_id").agg(F.count("*").alias("cnt")).collect()}
-    assert per_asset == {0: 1, 1: 1, 2: 2}  # ceil-ish sampling: 2500 bytes -> 2 samples
-
-
 def test_rolling_fingerprint_is_position_sensitive(spark):
     from train_reports_etl_spark.extensions.text import rolling_fingerprint
 
@@ -202,23 +183,6 @@ def test_rp_lsh_finds_planted_near_dups(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     # random gaussians in 64-dim are near-orthogonal: no false accepts
     assert set(pairs) == {(0, 1)}
-
-
-def test_multimodal_resize_fits_box_and_reencodes(spark):
-    from train_reports_etl_spark.extensions.multimodal import resize_assets
-
-    docs = spark.createDataFrame(
-        [(0, "x" * 3000), (1, "y" * 10)], ["doc_id", "text"]
-    )
-    out = {r.asset_id: r for r in resize_assets(documents_as_assets(docs), 64, 64).collect()}
-    # stub dims for 3000 bytes: (3000%1920+1, 3000*7%1080+1) = (1081, 481)
-    # scale = min(64/1081, 64/481, 1) -> width hits the box edge
-    assert out[0].width <= 64 and out[0].height <= 64
-    assert out[0].width == 64 or out[0].height == 64
-    assert len(out[0].payload) == out[0].width * out[0].height
-    # stub dims (11, 71): height exceeds the box -> scale 64/71
-    assert (out[1].width, out[1].height) == (9, 64)
-    assert len(out[1].payload) == 9 * 64  # stub codec pads to the box
 
 
 def test_cosine_near_dup_lsh_within_blocks(spark):

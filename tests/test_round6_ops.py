@@ -224,23 +224,6 @@ def test_pq_encode_and_adc_match_hand_math(spark):
     assert [(r.vec_id, r.approx_l2) for r in rows] == [(1, -3.0), (2, 7.0)]
 
 
-def test_shuffle_hash_join_plans_without_sort(spark, sf_dir):
-    """shuffle_hash_join must plan ShuffledHashJoin (no SMJ sorts) and
-    return exactly the rows of the unhinted join."""
-    from train_reports_etl_spark.operators.joins import shuffle_hash_join
-    from train_reports_etl_spark.sources.registry import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    joined = shuffle_hash_join(li, orders, "l_orderkey")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert joined.count() == li.join(orders, "l_orderkey").count()
-
-
 def test_last_touch_attribution_semantics(spark, tmp_path):
     """Hand-built corners: first-event purchase → 'direct'; credit
     reaches back past intervening purchases to the latest NON-purchase

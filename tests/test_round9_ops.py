@@ -303,3 +303,97 @@ def test_bench_burst_filter_selects_clean_passes():
     # every pass touched by a burst: keep all three rather than
     # silently emptying the medians (calibration.passes tells the tale)
     assert sel([0.1, 0.9, 0.16, 0.9]) == [0, 1, 2]
+
+
+# ------------------------------------------------- bench rows in spans
+
+
+def test_bench_row_trace_counts_jobs_and_shuffle_by_span(spark, sf_dir):
+    """A row of known shape: one job while it is built, a groupBy when
+    it runs. The trace has the exact job counts, and the row's shuffle
+    bytes are the StageReader statistics of its execute span. AQE is
+    off for the row, so its groupBy is one job whose stages all run."""
+    from train_reports_etl_spark.session import conf_scope
+
+    bench = _load_tool("bench", "bench.py")  # also puts perfbench/ on sys.path
+    from spans import MB, StageReader
+
+    def row(spark_, _sf_dir):
+        spark_.range(10).collect()
+        return spark_.range(0, 1000, numPartitions=4).groupBy(
+            (F.col("id") % 7).alias("k")
+        ).count()
+
+    tracer = bench.Tracer(spark, "bench-test", enabled=True)
+    with conf_scope(spark, "spark.sql.adaptive.enabled", "false"):
+        _, rec = bench.traced_row(tracer, bench.StreamProgress(), spark, sf_dir, row)
+    construct, execute = tracer.spans
+    assert (rec["construct_jobs"], rec["execute_jobs"]) == (1, 1)
+    assert (rec["stream_jobs"], rec["batches"], rec["state_rows"]) == (0, 0, 0)
+    assert rec["stages"] == 3
+    assert rec["wall"] == construct.seconds + execute.seconds
+    reader = StageReader(spark)
+    st = reader.stats(reader.group_jobs(execute.group, execute.first_job, execute.last_job))
+    assert rec["shuffle_bytes"] == round(st["shuffle_write_mb"] * MB) > 0
+
+
+@pytest.fixture(scope="module")
+def bench_subset(sf_dir):
+    """One ``bench.py --repeat 1`` run of three named rows in a process
+    of its own, and BENCH_FULL.json before and after it."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    path = os.path.join(root, "BENCH_FULL.json")
+    names = ["flagship_latest_order", "e1_streaming_dedup_first_seen", "store:simhash60"]
+    with open(path, "rb") as fh:
+        before = fh.read()
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_DRIVER_MEM="2g")
+    out = subprocess.run(
+        [sys.executable, "bench.py", "--repeat", "1", *names],
+        cwd=root, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    with open(path, "rb") as fh:
+        after = fh.read()
+    rows = [json.loads(ln) for ln in out.stdout.splitlines() if ln.startswith("{")]
+    return names, rows, before, after
+
+
+def test_bench_subset_prints_rows_and_leaves_bench_full_alone(bench_subset):
+    """``bench.py q …`` prints one line per named row and does not
+    write BENCH_FULL.json."""
+    names, rows, before, after = bench_subset
+    assert [r["row"] for r in rows] == names
+    query, _, build = rows
+    assert query["median"] > 0 and len(query["runs"]) == 1
+    assert query["trace"]["construct_jobs"] >= 1 and query["trace"]["execute_jobs"] >= 1
+    assert build["median"] > 0 and build["trace"]["build_jobs"] >= 1
+    assert after == before
+
+
+def test_bench_streaming_row_reads_stream_jobs_by_run_id(bench_subset):
+    """Micro-batches run under the stream's run id, outside the row's
+    spans; the row still counts their jobs and batches."""
+    _, rows, _, _ = bench_subset
+    trace = rows[1]["trace"]
+    assert trace["stream_jobs"] >= 1
+    assert trace["batches"] >= 1
+
+
+def test_library_reads_no_progress_or_status_store():
+    """Measurement lives in perfbench/spans.py: library code reads no
+    streaming progress and no job or stage status."""
+    import pathlib
+    import re
+
+    package = pathlib.Path(__file__).resolve().parents[1] / "train_reports_etl_spark"
+    found = [
+        f"{path.relative_to(package).as_posix()}: {line.strip()}"
+        for path in sorted(package.rglob("*.py"))
+        for line in path.read_text().splitlines()
+        if re.search(r"recentProgress|statusStore|statusTracker", line)
+    ]
+    assert found == []

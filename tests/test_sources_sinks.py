@@ -241,34 +241,6 @@ def test_copy_loader_sql_shape_and_null_roundtrip():
     assert log == []
 
 
-def test_bucketed_join_plans_without_exchange(spark, tmp_path):
-    from train_reports_etl_spark.sinks.bucketed import write_bucketed
-
-    # warehouse.dir is a static conf; managed test tables live in the
-    # session default (./spark-warehouse, gitignored) and DROP TABLE
-    # in the finally removes their files.
-    left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS b")
-    write_bucketed(left, "bkt_left", ["k"], 4, sort_cols=["k"])
-    write_bucketed(right, "bkt_right", ["k"], 4, sort_cols=["k"])
-    try:
-        # hint forces SMJ (tiny test tables would broadcast otherwise —
-        # at real scale both sides exceed the broadcast threshold)
-        j = spark.table("bkt_left").join(spark.table("bkt_right").hint("merge"), "k")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        # co-located: the bucketing IS the exchange, done once at write
-        assert "Exchange hashpartitioning" not in plan
-        assert j.count() == 1000
-        # aggregation on the bucket key also skips its exchange
-        agg = spark.table("bkt_left").groupBy("k").count()
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in aplan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
 def test_compaction_reduces_files_and_preserves_data(spark, tmp_path):
     from train_reports_etl_spark.sinks.compaction import compact_parquet, table_file_stats
 
@@ -330,33 +302,6 @@ def test_range_sorted_write_yields_disjoint_rowgroup_stats(spark, tmp_path):
 
     # and the data round-trips
     assert spark.read.parquet(sorted_path).count() == 50_000
-
-
-def test_jsonl_corpus_read_quarantines_corrupt_lines(spark, tmp_path):
-    """S14 — PERMISSIVE JSONL read: good rows parse with the declared
-    schema, malformed lines go to quarantine verbatim (plain and gzip)."""
-    import gzip
-
-    from train_reports_etl_spark.sources.jsonl import read_jsonl_corpus
-
-    lines = [
-        '{"doc_id": 1, "text": "alpha"}',
-        'this is not json',
-        '{"doc_id": 2, "text": "beta"}',
-        '{"doc_id": "NaN-ish", "text": 3}',
-    ]
-    plain = tmp_path / "corpus.jsonl"
-    plain.write_text("\n".join(lines) + "\n")
-    gz = tmp_path / "corpus2.jsonl.gz"
-    with gzip.open(gz, "wt") as f:
-        f.write("\n".join(lines) + "\n")
-
-    for src in (str(plain), str(gz)):
-        good, bad = read_jsonl_corpus(spark, src, "doc_id long, text string")
-        assert {(r["doc_id"], r["text"]) for r in good.collect()} >= {(1, "alpha"), (2, "beta")}
-        bad_lines = [r["_corrupt_record"] for r in bad.collect()]
-        assert "this is not json" in bad_lines
-        assert good.columns == ["doc_id", "text"]
 
 
 def test_bulk_load_constraint_hooks_ordering(spark, monkeypatch):

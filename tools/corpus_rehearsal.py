@@ -33,6 +33,8 @@ Usage::
 Prints one line per stage (wall, shuffle MB, output rows) and a JSON
 summary; exits 1 if any stage fails or the invariant checks at the
 end fail (tokens allocated ≤ budget, shards cover every admitted doc).
+Each stage runs in a ``perfbench/spans.py`` span; its shuffle MB
+(10^6 bytes) is the shuffle-write of the span's own jobs.
 """
 
 from __future__ import annotations
@@ -41,20 +43,19 @@ import json
 import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
-from bench import shuffle_write_bytes
-from train_reports_etl_spark.session import get_spark
+from bench import session  # also puts perfbench/ on sys.path
+from spans import MB, Tracer
 
 
 def main() -> int:
     argv = sys.argv[1:]
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    src = os.path.join(here, ".scaledata", "x30")
+    src = os.path.join(ROOT, ".scaledata", "x30")
     work = "/tmp/corpus_rehearsal"
     json_out = None
     if "--src" in argv:
@@ -72,21 +73,19 @@ def main() -> int:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
 
-    spark = get_spark("corpus-rehearsal")
+    spark = session("corpus-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     stages: dict[str, dict] = {}
+    tracer = Tracer(spark, "corpus-rehearsal", enabled=True)
 
     def stage(name: str, fn):
-        sb0 = shuffle_write_bytes(spark)
-        t0 = time.time()
-        out_df = fn()
         path = os.path.join(work, f"{name}.parquet")
-        out_df.write.mode("overwrite").parquet(path)
-        back = spark.read.parquet(path)
-        rows = back.count()
-        wall = round(time.time() - t0, 2)
-        sb1 = shuffle_write_bytes(spark)
-        mb = round((sb1 - sb0) / 1e6, 1) if sb0 >= 0 and sb1 >= 0 else -1.0
+        with tracer.span(name, "stage") as sp:
+            fn().write.mode("overwrite").parquet(path)
+            back = spark.read.parquet(path)
+            rows = back.count()
+        wall = round(sp.seconds, 2)
+        mb = round(sp.stats["shuffle_write_mb"] * MB / 1e6, 1)
         stages[name] = {"wall": wall, "shuffle_mb": mb, "rows": rows}
         print(f"{name:12s} wall={wall:8.2f}s shuffle={mb:9.1f}MB rows={rows}")
         return back

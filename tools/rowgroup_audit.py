@@ -56,6 +56,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import run_query
 from train_reports_etl_spark.session import get_spark
 
 STAR_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
@@ -138,11 +139,7 @@ def run_one(spark, qs, name: str, sf_dir: str, group: str, timeout_s: float):
     t0 = time.time()
     status = "ok"
     try:
-        df = qs[name](spark, sf_dir)
-        try:
-            df.write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001
-            df.count()
+        run_query(qs[name](spark, sf_dir))
     except Exception as e:  # noqa: BLE001
         status = (
             "timeout"

@@ -17,6 +17,12 @@ Default query set = the quadratic-prone candidates VERDICT r06 named:
 hamming chunk-pair join, the LSH/jaccard family, SemDeDup, substring
 spans, plus two linear controls (exact dedup, quality gate) whose
 alpha should sit near 1.0 as a baseline for harness overhead.
+
+Each (dir, query, repeat) runs in the bench's traced row
+(``bench.traced_row``: ``construct`` and ``execute`` spans, the action
+being ``count()``), so every cell also records its jobs, stages and
+shuffle-write MB (10^6 bytes) from the span statistics, and streaming
+cells their micro-batches, ``state_rows`` and ``state_mb``.
 """
 
 from __future__ import annotations
@@ -25,12 +31,12 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from train_reports_etl_spark.session import get_spark
+from bench import session, traced_row  # also puts perfbench/ on sys.path
+from spans import StreamProgress, Tracer
 
 DEFAULT_QUERIES = [
     # quadratic-prone pair pipelines (VERDICT r06 #1)
@@ -50,10 +56,11 @@ DEFAULT_QUERIES = [
 ]
 
 # The stateful streaming family (VERDICT r07 #1): wall is only half the
-# story here — the probe also records each run's peak state-store rows
-# and bytes (applyInPandasWithState / symmetric-join / window state),
-# harvested from the query progress by ext_queries._capture_stream_state.
-# Select with ``--family streaming``.
+# story here — the probe also records each run's state-store rows and
+# bytes (applyInPandasWithState / symmetric-join / window state) from
+# the stream's progress events (``perfbench/spans.stream_stats``: the
+# max over micro-batches of the batch's rows summed over its stateful
+# operators). Select with ``--family streaming``.
 STREAMING_QUERIES = [
     "e5_stateful_sessionize",
     "e1_streaming_dedup_first_seen",
@@ -151,7 +158,7 @@ def main() -> int:
             print(f"missing dataset dir {d} — run tools/gen_scaledata.py first")
             return 2
 
-    spark = get_spark("scale-probe")
+    spark = session("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     # Probe-only sink overrides (e.g. the session-window counting sink:
@@ -183,6 +190,9 @@ def main() -> int:
         for d in dirs
     }
 
+    tracer = Tracer(spark, "scale-probe", enabled=True)
+    progress = StreamProgress()
+    spark.streams.addListener(progress)
     results: dict[str, dict] = {"dirs": meta, "repeat": repeat, "stores": {}, "queries": {}}
     for d in dirs:
         label = os.path.basename(d.rstrip("/"))
@@ -192,45 +202,39 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — a store needing absent tables
             print(f"store prebuild partial on {label}: {e}", file=sys.stderr)
         for name in names:
-            walls, rows = [], -1
-            state_ops: list[dict] = []
+            recs, rows = [], -1
             for _ in range(repeat):
-                from train_reports_etl_spark.extensions.ext_queries import (
-                    LAST_STREAM_STATE,
-                )
-
-                LAST_STREAM_STATE.clear()
-                t0 = time.time()
                 try:
-                    rows = qs[name](spark, d).count()
-                    walls.append(time.time() - t0)
-                    # streaming queries deposit their per-operator peak
-                    # state metrics here (keyed by sink name); keep the
-                    # run with the largest observed state
-                    for ops in LAST_STREAM_STATE.values():
-                        if sum(o.get("peak_state_rows", 0) for o in ops) >= sum(
-                            o.get("peak_state_rows", 0) for o in state_ops
-                        ):
-                            state_ops = ops
+                    rows, rec = traced_row(
+                        tracer, progress, spark, d, qs[name], action=lambda df: df.count()
+                    )
+                    recs.append(rec)
                 except Exception as e:  # noqa: BLE001
                     print(f"{label} {name} FAILED: {str(e)[:200]}", file=sys.stderr)
-                    walls = []
+                    recs = []
                     break
-            rec = results["queries"].setdefault(name, {})
-            rec[label] = {
-                "wall": round(statistics.median(walls), 3) if walls else -1.0,
-                "rows": rows,
-            }
-            if state_ops:
-                rec[label]["state"] = state_ops
+            cell = {"wall": round(statistics.median(r["wall"] for r in recs), 3) if recs else -1.0, "rows": rows}
+            if recs:
+                cell["jobs"] = statistics.median(
+                    r["construct_jobs"] + r["execute_jobs"] + r["stream_jobs"] for r in recs
+                )
+                cell["stages"] = statistics.median(r["stages"] for r in recs)
+                cell["shuffle_mb"] = round(statistics.median(r["shuffle_bytes"] for r in recs) / 1e6, 3)
+                # keep the run with the largest observed state
+                top = max(recs, key=lambda r: r["state_rows"])
+                if top["batches"]:
+                    cell.update(
+                        batches=top["batches"], state_rows=top["state_rows"], state_mb=round(top["state_mb"], 3)
+                    )
+            results["queries"].setdefault(name, {})[label] = cell
             extra = ""
-            if state_ops:
-                srows = sum(o.get("peak_state_rows", 0) for o in state_ops)
-                sbytes = sum(o.get("peak_state_bytes", 0) for o in state_ops)
-                extra = f" state_rows={srows} state_mb={sbytes / 1e6:.1f}"
+            if "state_rows" in cell:
+                extra = f" state_rows={cell['state_rows']} state_mb={cell['state_mb']:.1f}"
             print(
-                f"{label:6s} {name:32s} wall={rec[label]['wall']:8.3f}s rows={rows}{extra}"
+                f"{label:6s} {name:32s} wall={cell['wall']:8.3f}s rows={rows}"
+                f" jobs={cell.get('jobs', -1)} shuffle_mb={cell.get('shuffle_mb', -1.0)}{extra}"
             )
+    spark.streams.removeListener(progress)
 
     # exponent fit between consecutive dirs, on the table each query
     # actually scans (documents / embeddings / events)
@@ -254,12 +258,8 @@ def main() -> int:
             # state-size growth exponent for streaming queries: at
             # 100 TB, state rows growing FASTER than keys is the
             # failure mode wall-time hides on small runs
-            sa = sum(
-                o.get("peak_state_rows", 0) for o in rec.get(a, {}).get("state", [])
-            )
-            sb = sum(
-                o.get("peak_state_rows", 0) for o in rec.get(b, {}).get("state", [])
-            )
+            sa = rec.get(a, {}).get("state_rows", 0)
+            sb = rec.get(b, {}).get("state_rows", 0)
             if na and nb and sa > 0 and sb > 0:
                 salpha = math.log(sb / sa) / math.log(nb / na)
                 cells.append(f"state {a}->{b}: {salpha:5.2f}")

@@ -941,40 +941,6 @@ def _stream_events(spark: SparkSession, sf_dir: str):
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-# Probe surface: peak state-store metrics of the most recent streaming
-# run per sink name, harvested from the stopped query's progress events
-# (numRowsTotal / memoryUsedBytes per stateful operator, max over
-# micro-batches). Wall-clock alone cannot show state growth — at 100 TB
-# the risk axis of applyInPandasWithState is rows×bytes of retained
-# state per key, which tools/scale_probe.py reads from here to fit a
-# growth exponent alongside the wall fit.
-LAST_STREAM_STATE: dict[str, list[dict]] = {}
-
-
-def _capture_stream_state(q, name: str) -> None:
-    """Harvest per-operator peak state metrics from a (finished)
-    streaming query's recent progress. Best-effort: a missing metrics
-    surface must never fail the query itself."""
-    try:
-        peaks: dict[int, dict] = {}
-        for p in q.recentProgress:
-            for i, so in enumerate((p or {}).get("stateOperators") or []):
-                rec = peaks.setdefault(
-                    i, {"operator": so.get("operatorName", f"op{i}")}
-                )
-                for key, field in (
-                    ("numRowsTotal", "peak_state_rows"),
-                    ("memoryUsedBytes", "peak_state_bytes"),
-                    ("numRowsUpdated", "peak_rows_updated"),
-                ):
-                    v = so.get(key)
-                    if isinstance(v, (int, float)):
-                        rec[field] = max(rec.get(field, 0), int(v))
-        LAST_STREAM_STATE[name] = [peaks[i] for i in sorted(peaks)]
-    except Exception:  # noqa: BLE001 — metrics are advisory
-        pass
-
-
 def _run_to_memory_until_flushed(out, name: str, n_state_partitions: int = 8):
     """Like :func:`_run_to_memory`, but for APPEND-mode windowed aggs
     whose emission happens in the watermark-commit (no-data) micro-batch
@@ -1003,13 +969,12 @@ def _run_to_memory_until_flushed(out, name: str, n_state_partitions: int = 8):
             last = n
             time.sleep(0.05)
             q.processAllAvailable()
-        _capture_stream_state(q, name)
     finally:
         q.stop()
     return q
 
 
-def _run_counting_until_flushed(out, name: str, n_state_partitions: int = 8) -> int:
+def _run_counting_until_flushed(out, n_state_partitions: int = 8) -> int:
     """foreachBatch COUNTING sink for scale-probe runs (VERDICT r08
     what's-wrong #4): the memory sink collects every emitted row to
     the driver, so once a windowed agg emits millions of rows the
@@ -1038,7 +1003,6 @@ def _run_counting_until_flushed(out, name: str, n_state_partitions: int = 8) -> 
             last = n
             time.sleep(0.05)
             q.processAllAvailable()
-        _capture_stream_state(q, name)
     finally:
         q.stop()
     return totals["rows"]
@@ -1053,7 +1017,7 @@ def _probe_session_windows_counting(spark: SparkSession, sf_dir: str) -> DataFra
     from train_reports_etl_spark.streaming.windows import streaming_session_sums
 
     out = streaming_session_sums(_stream_events(spark, sf_dir))
-    n = _run_counting_until_flushed(out, "e5_streaming_session_probe")
+    n = _run_counting_until_flushed(out)
     return local_frame(spark, [(int(n),)], "emitted_rows bigint")
 
 
@@ -1085,7 +1049,6 @@ def _run_to_memory(out, name: str, n_state_partitions: int = 8):
         )
     try:
         q.processAllAvailable()
-        _capture_stream_state(q, name)
     finally:
         q.stop()
     return q

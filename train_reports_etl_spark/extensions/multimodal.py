@@ -3,9 +3,9 @@
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata alongside. The Spark-side machinery — schemas, Arrow-batched
 ``mapInPandas`` transforms, partition sizing — is real and tested; the
-actual codec step is stubbed behind a deterministic fake (the decode
-libraries are not in this container; swap ``_decode_stub`` for a real
-decoder in production — the surrounding plumbing does not change).
+decode step is a deterministic fake (``_fake_gray_image``; the decode
+libraries are not in this container). Swap in a real decoder in
+production — the surrounding plumbing does not change.
 
 Scale notes: payloads stay in executor memory one Arrow batch at a
 time (``maxRecordsPerBatch`` bounds batch bytes); metadata extraction
@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -40,17 +39,6 @@ ASSET_SCHEMA = StructType(
     ]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("media_type", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("checksum", StringType(), True),
-    ]
-)
-
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
     """Build a multimodal asset table from the documents fixture:
@@ -64,106 +52,6 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
         F.encode(F.col("text"), "utf-8").alias("payload"),
         F.octet_length(F.encode(F.col("text"), "utf-8")).cast("long").alias("n_bytes"),
     )
-
-
-def _decode_stub(payload: bytes, media_type: str) -> tuple[int, int]:
-    """STUB decoder — deterministic fake dimensions from payload bytes.
-
-    Replace with e.g. PIL/av decoding in production; everything else in
-    this module (schema, batching, partitioning) is decoder-agnostic.
-    A real implementation would ``raise NotImplementedError`` on codecs
-    it does not support; the fake keeps tests hermetic.
-    """
-    if payload is None:
-        return (0, 0)
-    n = len(payload)
-    return (n % 1920 + 1, (n * 7) % 1080 + 1)
-
-
-def extract_features(assets: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """Arrow-batched feature extraction over the payload column.
-
-    ``mapInPandas`` streams one Arrow batch at a time through Python —
-    payload bytes never accumulate beyond a batch; with real media this
-    is where you bound memory via
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-    """
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                _decode_stub(p, m)
-                for p, m in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "width": pd.Series([d[0] for d in dims], dtype="int32"),
-                    "height": pd.Series([d[1] for d in dims], dtype="int32"),
-                    "checksum": [
-                        hashlib.md5(p).hexdigest() if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("media_type", StringType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-    ]
-)
-
-
-def _resize_stub(payload: bytes, w: int, h: int) -> bytes:
-    """STUB resize — deterministic fake: truncate/pad the payload to
-    w*h bytes (a real implementation decodes, resamples, re-encodes;
-    swap in PIL here). Keeps the contract visible: output payload size
-    is a function of the target box, not the input size."""
-    if payload is None:
-        return None
-    target = w * h
-    return payload[:target] if len(payload) >= target else payload + b"\x00" * (target - len(payload))
-
-
-def resize_assets(assets: DataFrame, max_w: int = 64, max_h: int = 64) -> DataFrame:
-    """E6 — resize transform over the payload column, Arrow-batched.
-
-    Aspect-preserving fit into (max_w, max_h) computed from the stub
-    decoder's dimensions; payload re-encoded by the stub codec. The
-    plumbing — batch iteration, binary in/out schema, narrow no-shuffle
-    map — is exactly what a PIL/libav implementation would use.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_w, out_h, payloads = [], [], []
-            for p, m in zip(pdf["payload"], pdf["media_type"]):
-                w, h = _decode_stub(p, m)
-                scale = min(max_w / max(w, 1), max_h / max(h, 1), 1.0)
-                nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                out_w.append(nw)
-                out_h.append(nh)
-                payloads.append(_resize_stub(p, nw, nh))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": payloads,
-                    "width": pd.Series(out_w, dtype="int32"),
-                    "height": pd.Series(out_h, dtype="int32"),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def frame_sample_plan(assets: DataFrame, every_n_bytes: int = 1000) -> DataFrame:

@@ -115,29 +115,3 @@ def salted_join(
     )
     return f.join(d, on=[on, "__salt"], how=how).drop("__salt")
 
-
-def shuffle_hash_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join pinned to SHUFFLED-HASH instead of sort-merge: both
-    sides shuffle by the key as usual, but each partition then builds
-    a hash map of the (smaller) right side and probes it — no sort of
-    EITHER side.
-
-    When it wins at 100 TB: a fact-to-mid-size join where the right
-    side's per-partition slice fits executor memory but the table is
-    far too big to broadcast (e.g. lineitem ⋈ a 100 GB orders-day
-    slice over 1000 partitions → 100 MB builds). SMJ pays
-    O(n log n) sorts of BOTH sides for nothing; SHJ is linear.
-    When it loses: build-side partitions that outgrow memory (SHJ
-    cannot spill the build map gracefully pre-Spark-3.2; since 3.2 it
-    spills but degrades) or inputs that arrive ALREADY sorted/bucketed
-    (then SMJ's sort is free and its merge is cache-friendly). The
-    planner keeps the final word — the hint is advisory, and AQE may
-    still convert to broadcast if runtime stats allow; result rows are
-    identical under every strategy.
-    """
-    return left.join(right.hint("shuffle_hash"), on=on, how=how)
