@@ -2,11 +2,9 @@
 
 The sandbox has no Postgres, but the COPY fast path
 (`train_reports_etl_spark/sinks/jdbc_copy.py`, mirroring reference
-`reports_exporter_v0.83.py:1357-1372` and the constraint lifecycle at
-`:1801-1835`) deserves more than fake-connection unit pins: this module
-provides a tiny TCP server so `copy_into_postgres` /
-`bulk_load_with_constraint_hooks` run through REAL `foreachPartition`
-executor calls with real bytes on a real socket.
+`reports_exporter_v0.83.py:1357-1372`) deserves more than fake-connection unit pins: this module
+provides a tiny TCP server so `copy_into_postgres` runs through REAL
+`foreachPartition` executor calls with real bytes on a real socket.
 
 Protocol (not pg-wire — deliberately minimal): length-framed JSON
 messages ``{"op": "exec"|"copy"|"commit"|"rollback", ...}``. ``copy``
@@ -35,10 +33,8 @@ Tables may optionally be *typed* via :meth:`FakePgServer.register_table`
   aborts the transaction on any COPY error; nothing staged survives).
 - **Constraint lifecycle**: ``ALTER TABLE ... DROP CONSTRAINT`` /
   ``ADD CONSTRAINT ... PRIMARY KEY (...)`` DDL is parsed from ``exec``
-  messages; *re-adding* a PK validates every existing row first — so a
-  duplicate loaded while constraints were dropped fails at recreate
-  time, exactly like Postgres (`reports_exporter_v0.83.py:1801-1835`
-  relies on this to make its drop→bulk-load→recreate cycle safe).
+  messages; *re-adding* a PK fails on an existing NULL key value
+  (existing duplicate keys are not checked).
 - **Faithful error surface** (review-hardened): DROP of a wrong or
   already-dropped constraint errors ("does not exist"); a second ADD
   PRIMARY KEY while one is active errors (42P16); unquoted identifiers
@@ -376,8 +372,9 @@ class FakePgServer:
 
     def _apply_ddl(self, sql: str, tx_snapshot: dict[str, tuple] | None = None) -> None:
         """Recognize constraint DDL; everything else is recorded only.
-        Re-adding a PK validates all existing rows, like Postgres —
-        both duplicate keys AND null key values fail the ADD.
+        Re-adding a PK checks the existing rows for null key values,
+        which fail the ADD as in Postgres; existing duplicate keys are
+        not checked.
 
         ``tx_snapshot``: per-transaction rollback journal. The spec's
         pre-statement constraint state is recorded (first touch only)
@@ -441,19 +438,11 @@ class FakePgServer:
                     f"multiple primary keys for table {table} are not allowed"
                 )
             order = list(spec.types)
-            seen: set[tuple] = set()
             for row in self.tables.get(table, []):
                 raw_key = tuple(row[order.index(c)] for c in cols)
                 if any(v is None for v in raw_key):
                     null_col = cols[raw_key.index(None)]
                     raise CopyError(f'column "{null_col}" contains null values')
-                key = self._pk_key(raw_key)
-                if key in seen:
-                    raise CopyError(
-                        f'could not create unique index "{name}": '
-                        f"key {cols}={raw_key} is duplicated"
-                    )
-                seen.add(key)
             self._journal(tx_snapshot, table, spec)
             spec.pk, spec.pk_name, spec.pk_active = cols, name, True
             spec.not_null |= set(cols)

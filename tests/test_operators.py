@@ -41,14 +41,6 @@ def test_null_split_empty_required_keeps_all(dirty):
     assert good.count() == 5 and bad.count() == 0
 
 
-def test_require_non_empty_both_branches(dirty):
-    from train_reports_etl_spark.operators.split import require_non_empty
-
-    assert require_non_empty(dirty) is dirty  # pass-through on rows
-    with pytest.raises(ValueError, match="occupancy: no rows"):
-        require_non_empty(dirty.filter(F.lit(False)), context="occupancy")
-
-
 def test_prune_columns(spark):
     df = spark.createDataFrame([(1, 2, 3)], ["a", "Unnamed: 0", "Unnamed: 5"])
     assert prune_columns(df).columns == ["a"]

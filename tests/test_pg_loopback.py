@@ -1,13 +1,11 @@
 """End-to-end COPY bulk load over a real socket (no live Postgres).
 
-Upgrades the fake-connection unit pins: `copy_into_postgres` and
-`bulk_load_with_constraint_hooks` run through genuine
-``foreachPartition`` executor calls, streaming length-framed COPY
-payloads over TCP to an in-process server (tests/pg_loopback.py) that
-applies psycopg2-style commit semantics and ``FORMAT csv, NULL ''``
-parsing. Mirrors reference `reports_exporter_v0.83.py:1357-1372`
-(COPY-from-buffer bulk load) and `:1801-1835` (constraint lifecycle
-around loads above the 400k-row threshold).
+Upgrades the fake-connection unit pins: `copy_into_postgres` runs
+through genuine ``foreachPartition`` executor calls, streaming
+length-framed COPY payloads over TCP to an in-process server
+(tests/pg_loopback.py) that applies psycopg2-style commit semantics
+and ``FORMAT csv, NULL ''`` parsing. Mirrors reference
+`reports_exporter_v0.83.py:1357-1372` (COPY-from-buffer bulk load).
 """
 
 from __future__ import annotations
@@ -19,12 +17,7 @@ import pytest
 from pyspark.sql import types as T
 
 from tests.pg_loopback import FakePgServer, make_loopback_connect, parse_copy_csv
-from train_reports_etl_spark.sinks.jdbc_copy import (
-    bulk_load_with_constraint_hooks,
-    constraint_sql_hooks,
-    copy_into_postgres,
-    encode_csv_rows,
-)
+from train_reports_etl_spark.sinks.jdbc_copy import copy_into_postgres, encode_csv_rows
 
 SCHEMA = T.StructType(
     [
@@ -77,58 +70,6 @@ def test_copy_into_postgres_over_socket(spark):
         commits = [e for e in server.events if e[0] == "copy_commit"]
         assert sum(e[2] for e in commits) == len(ROWS)
         assert 1 <= len(commits) <= 4
-
-
-def test_bulk_load_constraint_hooks_over_socket(spark):
-    """Above the row threshold: drop-constraints DDL strictly precedes
-    every executor COPY commit, recreate-DDL strictly follows — the
-    reference's `:1801-1835` ordering, observed on the server's
-    globally-ordered event log."""
-    df = spark.createDataFrame(ROWS, SCHEMA).repartition(3)
-    with FakePgServer() as server:
-        dsn = f"host=127.0.0.1 port={server.port} dbname=test"
-        connect = make_loopback_connect(server.port)
-        pre, post = constraint_sql_hooks(
-            dsn,
-            "SELECT analytics.remove_constraints('loopback')",
-            "SELECT analytics.recreate_loopback_constraints()",
-            connect=connect,
-        )
-        n = bulk_load_with_constraint_hooks(
-            df,
-            dsn,
-            "analytics.loopback",
-            pre_load=pre,
-            post_load=post,
-            row_threshold=0,  # force the constraint lifecycle
-            connect=connect,
-        )
-        assert n == len(ROWS)
-        assert set(server.tables['"analytics"."loopback"']) == EXPECTED
-        kinds = [e[0] for e in server.events]
-        assert kinds[0] == "exec" and "remove_constraints" in server.events[0][1]
-        assert kinds[-1] == "exec" and "recreate" in server.events[-1][1]
-        assert all(k == "copy_commit" for k in kinds[1:-1])
-        assert kinds.count("copy_commit") >= 1
-
-
-def test_below_threshold_skips_constraint_ddl(spark):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    with FakePgServer() as server:
-        dsn = f"host=127.0.0.1 port={server.port} dbname=test"
-        connect = make_loopback_connect(server.port)
-        pre, post = constraint_sql_hooks(dsn, "SELECT drop", "SELECT add", connect=connect)
-        bulk_load_with_constraint_hooks(
-            df,
-            dsn,
-            "t",
-            pre_load=pre,
-            post_load=post,
-            row_threshold=100,  # 5 rows < 100: no DDL
-            connect=connect,
-        )
-        assert all(e[0] == "copy_commit" for e in server.events)  # no DDL
-        assert set(server.tables['"t"']) == EXPECTED
 
 
 TYPED_COLS = [
@@ -215,70 +156,6 @@ def test_pk_enforced_across_partition_transactions(spark):
             copy_into_postgres(df2, f"port={server.port}", "typed", connect=connect)
         committed = server.tables['"typed"']
         assert len(committed) == 1 and committed[0][0] == 1  # df1 stands, df2 atomic-failed
-
-
-def test_constraint_recreate_catches_dup_loaded_while_dropped(spark):
-    """The reference's drop→bulk-load→recreate cycle (`:1801-1835`) is
-    only safe because re-adding the PK revalidates the table. With
-    constraints dropped the duplicate loads fine; the recreate DDL then
-    fails — surfaced to the driver via post_load (a finally:, so it
-    always runs)."""
-    dup_rows = [
-        ("1", "1.00", "t", "2024-01-01", "a"),
-        ("1", "2.00", "f", "2024-01-02", "dup"),
-    ]
-    df = spark.createDataFrame(
-        dup_rows, "id string, amount string, ok string, day string, label string"
-    ).repartition(2)
-    with _typed_server() as server:
-        dsn = f"port={server.port}"
-        connect = make_loopback_connect(server.port)
-        pre, post = constraint_sql_hooks(
-            dsn,
-            'ALTER TABLE "typed" DROP CONSTRAINT typed_pk',
-            'ALTER TABLE "typed" ADD CONSTRAINT typed_pk PRIMARY KEY (id)',
-            connect=connect,
-        )
-        with pytest.raises(Exception, match="could not create unique index"):
-            bulk_load_with_constraint_hooks(
-                df, dsn, "typed", pre_load=pre, post_load=post,
-                row_threshold=0, connect=connect,
-            )
-        # both rows DID load (constraints were down) — the failure is
-        # the recreate, exactly where Postgres would raise it
-        assert len(server.tables['"typed"']) == 2
-        assert server.schemas['"typed"'].pk_active is False  # recreate failed
-
-
-def test_constraint_lifecycle_round_trips_when_clean(spark):
-    """No duplicates: drop → load → recreate succeeds and the PK is
-    active again, enforcing on the next load."""
-    df = spark.createDataFrame(
-        [("1", "1.00", "t", "2024-01-01", "a"), ("2", "2.00", "f", "2024-01-02", "b")],
-        "id string, amount string, ok string, day string, label string",
-    ).repartition(2)
-    with _typed_server() as server:
-        dsn = f"port={server.port}"
-        connect = make_loopback_connect(server.port)
-        pre, post = constraint_sql_hooks(
-            dsn,
-            'ALTER TABLE "typed" DROP CONSTRAINT typed_pk',
-            'ALTER TABLE "typed" ADD CONSTRAINT typed_pk PRIMARY KEY (id)',
-            connect=connect,
-        )
-        bulk_load_with_constraint_hooks(
-            df, dsn, "typed", pre_load=pre, post_load=post, row_threshold=0, connect=connect
-        )
-        assert len(server.tables['"typed"']) == 2
-        assert server.schemas['"typed"'].pk_active is True
-        # PK is live again: a repeat of id=1 now fails at COPY time
-        dup = spark.createDataFrame(
-            [("1", "0.00", "t", "2024-01-05", "again")],
-            "id string, amount string, ok string, day string, label string",
-        ).coalesce(1)
-        with pytest.raises(Exception, match="duplicate key value"):
-            copy_into_postgres(dup, dsn, "typed", connect=connect)
-        assert len(server.tables['"typed"']) == 2
 
 
 def test_copy_column_count_mismatch_rejected():

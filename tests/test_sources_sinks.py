@@ -11,12 +11,7 @@ from pyspark.sql import functions as F
 
 from train_reports_etl_spark.operators.islands import consecutive_date_ranges
 from train_reports_etl_spark.plans.schemas import OCCUPANCY_HEADER, TRAIN_LIST_HEADER
-from train_reports_etl_spark.sinks.audit import (
-    append_audit,
-    check_version_gate,
-    read_audit,
-    record_version,
-)
+from train_reports_etl_spark.sinks.audit import append_audit, check_version_gate, record_version
 from train_reports_etl_spark.sinks.partitioned import idempotent_overwrite, load_report
 from train_reports_etl_spark.sinks.quarantine import write_quarantine
 from train_reports_etl_spark.sources.sniffer import sniff_rows
@@ -159,17 +154,21 @@ def test_audit_append_and_version_gate(spark, tmp_path):
     apath = str(tmp_path / "audit")
     append_audit(spark, apath, "train_list", "insert", ["2024-01-01", "2024-01-02"])
     append_audit(spark, apath, "occupancy", "insert", ["2024-01-01"])
-    audit = read_audit(spark, apath)
+    audit = spark.read.parquet(apath)
     assert audit.count() == 3
     assert audit.filter("table_name = 'train_list'").count() == 2
 
     vpath = str(tmp_path / "versions")
-    check_version_gate(spark, vpath, my_version=0.83)  # no table yet: ok
-    record_version(spark, vpath, 0.83)
-    check_version_gate(spark, vpath, my_version=0.83)  # same: ok
-    record_version(spark, vpath, 0.90)
-    with pytest.raises(RuntimeError, match="0.9"):
-        check_version_gate(spark, vpath, my_version=0.83)
+    check_version_gate(spark, vpath, my_version=(0, 83))  # no table yet: ok
+    record_version(spark, vpath, (0, 83))
+    check_version_gate(spark, vpath, my_version=(0, 83))  # same: ok
+    record_version(spark, vpath, (0, 9))
+    # 0.83 is newer than 0.9 (as floats it would be older)
+    check_version_gate(spark, vpath, my_version=(0, 83))
+    record_version(spark, vpath, (0, 90))
+    with pytest.raises(RuntimeError, match=r"v0\.90 > this engine v0\.83"):
+        check_version_gate(spark, vpath, my_version=(0, 83))
+    check_version_gate(spark, vpath, my_version=(1, 0, 0))
 
 
 def test_version_gate_corrupt_table_raises(spark, tmp_path):
@@ -179,7 +178,7 @@ def test_version_gate_corrupt_table_raises(spark, tmp_path):
     vdir.mkdir()
     (vdir / "part-0000.parquet").write_text("this is not parquet")
     with pytest.raises(Exception):
-        check_version_gate(spark, str(vdir), my_version=0.83)
+        check_version_gate(spark, str(vdir), my_version=(0, 83))
 
 
 class _FakeCursor:
@@ -302,101 +301,6 @@ def test_range_sorted_write_yields_disjoint_rowgroup_stats(spark, tmp_path):
 
     # and the data round-trips
     assert spark.read.parquet(sorted_path).count() == 50_000
-
-
-def test_bulk_load_constraint_hooks_ordering(spark, monkeypatch):
-    """S9+ constraint lifecycle (reference `reports_exporter_v0.83.py:
-    155,1801-1835`): above the row threshold, drop fires before COPY
-    and recreate after — and recreate still fires when the load dies.
-
-    The distributed COPY itself is pinned by
-    test_copy_loader_sql_shape_and_null_roundtrip; here it is stubbed
-    driver-side so the ordering is observable (executor-side appends
-    would not round-trip to this process)."""
-    import pytest
-
-    from train_reports_etl_spark.sinks import jdbc_copy
-    from train_reports_etl_spark.sinks.jdbc_copy import (
-        bulk_load_with_constraint_hooks,
-        constraint_sql_hooks,
-    )
-
-    order: list = []
-    monkeypatch.setattr(
-        jdbc_copy, "copy_into_postgres",
-        lambda df, dsn, table, columns=None, connect=None: order.append("copy"),
-    )
-
-    df = spark.range(0, 10).selectExpr("id AS a", "id * 2 AS b")
-
-    # below threshold: no hooks, straight COPY
-    n = bulk_load_with_constraint_hooks(
-        df, "dsn://x", "t",
-        pre_load=lambda: order.append("pre"),
-        post_load=lambda: order.append("post"),
-        row_threshold=100,
-    )
-    assert n == 10
-    assert order == ["copy"]
-
-    # above threshold: drop → copy → recreate, in order
-    order.clear()
-    bulk_load_with_constraint_hooks(
-        df, "dsn://x", "t",
-        pre_load=lambda: order.append("pre"),
-        post_load=lambda: order.append("post"),
-        row_threshold=5,
-    )
-    assert order == ["pre", "copy", "post"]
-
-    # row_count short-circuits the count job and drives the decision
-    order.clear()
-    bulk_load_with_constraint_hooks(
-        df, "dsn://x", "t",
-        pre_load=lambda: order.append("pre"),
-        post_load=lambda: order.append("post"),
-        row_threshold=5, row_count=3,
-    )
-    assert order == ["copy"]
-
-    # a failing load must still recreate constraints
-    order.clear()
-    monkeypatch.setattr(
-        jdbc_copy, "copy_into_postgres",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("db gone")),
-    )
-    with pytest.raises(RuntimeError):
-        bulk_load_with_constraint_hooks(
-            df, "dsn://x", "t",
-            pre_load=lambda: order.append("pre"),
-            post_load=lambda: order.append("post"),
-            row_threshold=5,
-        )
-    assert order == ["pre", "post"]
-
-    # the SQL hook builders run the given DDL on a fresh driver conn
-    ddl: list = []
-
-    class _DDLCursor(_FakeCursor):
-        def execute(self, sql):
-            ddl.append(sql)
-
-    class _DDLConn(_FakeConn):
-        def cursor(self):
-            return _DDLCursor(ddl)
-
-    pre, post = constraint_sql_hooks(
-        "dsn://x",
-        'SELECT "s".remove_constraints(\'s\', \'t\')',
-        'SELECT "s".recreate_t_constraints()',
-        connect=lambda dsn: _DDLConn([]),
-    )
-    pre()
-    post()
-    assert ddl == [
-        'SELECT "s".remove_constraints(\'s\', \'t\')',
-        'SELECT "s".recreate_t_constraints()',
-    ]
 
 
 def test_write_quarantine_zip_is_real_zip(spark, tmp_path):

@@ -1,10 +1,12 @@
 """AFC report-ETL dress rehearsal at volume (VERDICT r09 #4): the
 REFERENCE'S own workload shape — many xlsx files × sheets across the
-three report types — run end-to-end as one `plans/run_summary.run_reports`
-orchestration: discover → sniff → read (tiered, executor-side) →
-clean → derive → dedup → quarantine → idempotent partitioned load →
-audit, twice (the second run pins S11 idempotency), with per-stage
-walls and planted-defect count assertions.
+three report types — run end-to-end through the export program
+`plans/export.export_reports`: version gate → discover → sniff → read
+(tiered, executor-side) → clean → derive → dedup → quarantine →
+idempotent partitioned load → audit → archive, twice, each run on a
+fresh copy of the inbox (the second run pins S11 idempotency), with
+run walls and planted-defect count assertions on the program's
+observed counters.
 
 The generator is DETERMINISTIC and counts every defect it plants, so
 the assertions are exact equalities, not smoke checks:
@@ -31,7 +33,7 @@ Usage::
     python tools/report_rehearsal.py [--files-scale 1.0] \
         [--work /tmp/report_rehearsal] [--json OUT]
 
-Prints one line per stage and a JSON summary; exits 1 on any failed
+Prints the run walls and a JSON summary; exits 1 on any failed
 assertion. The driver-grade artifact is REHEARSAL_REPORTS.json.
 """
 
@@ -47,7 +49,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from train_reports_etl_spark.operators.islands import consecutive_date_ranges
 from train_reports_etl_spark.plans import schemas
+from train_reports_etl_spark.plans.export import export_reports
 from train_reports_etl_spark.session import get_spark
 from train_reports_etl_spark.sources import xlsx_lite
 
@@ -257,99 +261,18 @@ def table_state(spark, path: str) -> tuple[int, int]:
     return int(row["n"]), int(row["h"] or 0)
 
 
-def run_once(spark, src: str, out_root: str, walls: dict, counts: dict):
-    """One full run_reports orchestration with timed stages."""
-    from train_reports_etl_spark.plans.report_pipelines import (
-        bpd_pipeline,
-        occupancy_pipeline,
-        train_list_pipeline,
-    )
-    from train_reports_etl_spark.plans.run_summary import run_reports
-    from train_reports_etl_spark.sinks.audit import append_audit
-    from train_reports_etl_spark.sinks.partitioned import load_report
-    from train_reports_etl_spark.sinks.quarantine import write_quarantine_zip
-
+def export(spark, layout: dict, work: str, name: str, target: str):
+    """One ``export_reports`` run over a fresh copy of the generated
+    inbox (a run archives its inputs); returns (summary, inbox, wall)."""
+    inbox = os.path.join(work, name)
+    shutil.copytree(layout["src"], inbox)
     dep_dim = spark.createDataFrame(
         [(t, f"{6 + i % 16}:00:00") for i, t in enumerate(TRAINS)],
         ["train_number", "departure_time"],
     )
-    raws = []
-
-    def timed_pipeline(name, fn):
-        def run(raw):
-            t0 = time.time()
-            raw = raw.persist()
-            raws.append(raw)
-            counts[f"{name}_raw"] = raw.count()
-            walls[f"{name}_read"] = round(time.time() - t0, 2)
-            t0 = time.time()
-            res = fn(raw)
-            res.cleaned = res.cleaned.persist()
-            counts[f"{name}_clean"] = res.cleaned.count()
-            walls[f"{name}_pipeline"] = round(time.time() - t0, 2)
-            return res
-
-        return run
-
-    part_cols = {
-        "train_list": ("service_date", ["service_date"]),
-        "booking_payment_detailed": ("op_date", ["op_date"]),
-        "occupancy_list_hist": ("date", ["date", "data_date"]),
-    }
-
-    def exporter(name, res):
-        t0 = time.time()
-        qdir = os.path.join(out_root, "quarantine")
-        os.makedirs(qdir, exist_ok=True)
-        counts[f"{name}_err"] = res.error_rows.count()
-        counts[f"{name}_dups"] = res.duplicates.count()
-        write_quarantine_zip(res.error_rows, qdir, name, "errors", RUN_TS)
-        write_quarantine_zip(res.duplicates, qdir, name, "duplicates", RUN_TS)
-        walls[f"{name}_quarantine"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        cleaned = res.cleaned
-        if name == "booking_payment_detailed":
-            cleaned = cleaned.withColumn(
-                "op_date", F.substring("operation_date_time", 1, 10)
-            )
-        date_col, pcols = part_cols[name]
-        ranges = load_report(
-            cleaned, os.path.join(out_root, f"{name}.parquet"), date_col, pcols
-        )
-        append_audit(
-            spark,
-            os.path.join(out_root, "audit.parquet"),
-            name,
-            "load",
-            [f"{a}..{b}" for a, b in ranges],
-        )
-        counts[f"{name}_ranges"] = len(ranges)
-        walls[f"{name}_load"] = round(time.time() - t0, 2)
-
     t0 = time.time()
-    summary = run_reports(
-        spark,
-        src,
-        pipelines={
-            "train_list": timed_pipeline(
-                "train_list", lambda raw: train_list_pipeline(raw, dep_dim)
-            ),
-            "booking_payment_detailed": timed_pipeline(
-                "booking_payment_detailed", bpd_pipeline
-            ),
-            "occupancy_list_hist": timed_pipeline(
-                "occupancy_list_hist",
-                lambda raw: occupancy_pipeline(raw, data_date=DATA_DATE),
-            ),
-        },
-        exporter=exporter,
-    )
-    walls["run_total"] = round(time.time() - t0, 2)
-    for r in raws:
-        r.unpersist()
-    for res in summary.results.values():
-        res.cleaned.unpersist()
-    return summary
+    summary = export_reports(spark, inbox, target, dep_dim, DATA_DATE, RUN_TS)
+    return summary, inbox, round(time.time() - t0, 2)
 
 
 def main() -> int:
@@ -370,7 +293,6 @@ def main() -> int:
     os.makedirs(work)
 
     walls: dict[str, float] = {}
-    counts: dict[str, int] = {}
     expected = {
         "tl_err": 0, "tl_dup": 0, "bpd_err": 0, "bpd_clean": 0,
         "occ_err": 0, "occ_dup": 0, "copy2_tickets": [],
@@ -385,11 +307,9 @@ def main() -> int:
     spark = get_spark("report-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     out1 = os.path.join(work, "load")
-    os.makedirs(out1)
-    summary = run_once(spark, layout["src"], out1, walls, counts)
-    for k in sorted(walls):
-        if k != "generate":
-            print(f"{k:42s} {walls[k]:8.2f}s")
+    summary, inbox1, walls["run_total"] = export(spark, layout, work, "inbox1", out1)
+    print(f"{'run_total':42s} {walls['run_total']:8.2f}s")
+    counts = summary.counts
 
     failures: list[str] = []
 
@@ -397,23 +317,19 @@ def main() -> int:
         if not cond:
             failures.append(msg)
 
-    # planted-defect equalities
-    check(counts["train_list_raw"] == expected["tl_total"],
-          f"tl raw {counts['train_list_raw']} != {expected['tl_total']}")
-    check(counts["train_list_err"] == expected["tl_err"],
-          f"tl err {counts['train_list_err']} != {expected['tl_err']}")
-    check(counts["train_list_dups"] == expected["tl_dup"],
-          f"tl dups {counts['train_list_dups']} != {expected['tl_dup']}")
-    check(counts["train_list_clean"] == expected["tl_clean"],
-          f"tl clean {counts['train_list_clean']} != {expected['tl_clean']}")
-    check(counts["booking_payment_detailed_err"] == expected["bpd_err"],
-          f"bpd err {counts['booking_payment_detailed_err']} != {expected['bpd_err']}")
-    check(counts["booking_payment_detailed_clean"] == expected["bpd_clean"],
-          f"bpd clean {counts['booking_payment_detailed_clean']} != {expected['bpd_clean']}")
-    check(counts["occupancy_list_hist_err"] == expected["occ_err"],
-          f"occ err {counts['occupancy_list_hist_err']} != {expected['occ_err']}")
-    check(counts["occupancy_list_hist_dups"] == expected["occ_dup"],
-          f"occ dups {counts['occupancy_list_hist_dups']} != {expected['occ_dup']}")
+    # planted-defect equalities, read from the observed counters
+    for report, counter, want in (
+        ("train_list", "in", expected["tl_total"]),
+        ("train_list", "errors", expected["tl_err"]),
+        ("train_list", "duplicates", expected["tl_dup"]),
+        ("train_list", "loaded", expected["tl_clean"]),
+        ("booking_payment_detailed", "errors", expected["bpd_err"]),
+        ("booking_payment_detailed", "loaded", expected["bpd_clean"]),
+        ("occupancy_list_hist", "errors", expected["occ_err"]),
+        ("occupancy_list_hist", "duplicates", expected["occ_dup"]),
+    ):
+        got = counts.get(report, {}).get(counter)
+        check(got == want, f"{report} {counter} {got} != {want}")
 
     # per-file isolation: exactly one read failure (the corrupt file),
     # all three pipelines + exports green
@@ -422,6 +338,14 @@ def main() -> int:
           f"read failures {[(e.unit, e.error) for e in read_fails]}")
     check(all(e.ok for e in summary.events if e.stage in ("pipeline", "export")),
           "a pipeline/export stage failed")
+
+    # S13 archive: every loaded workbook moved to <inbox>/data/, the
+    # corrupt one stayed
+    left = sorted(f for f in os.listdir(inbox1) if f.endswith(".xlsx"))
+    archived = sorted(os.listdir(os.path.join(inbox1, "data")))
+    check(left == ["corrupt.xlsx"], f"left in inbox: {left}")
+    check(len(archived) == layout["n_files"] - 1,
+          f"archived {len(archived)} != {layout['n_files'] - 1}")
 
     # keep-last winners: every cross-file COPY2 ticket won its group
     tl = spark.read.parquet(os.path.join(out1, "train_list.parquet"))
@@ -446,24 +370,26 @@ def main() -> int:
     check(fold == 230 * expected["bpd_clean"],
           f"VAT fold sum {fold} != {230 * expected['bpd_clean']}")
 
-    # audit rows: one per covered range per report
+    # audit rows: one per covered range per report, the ranges recomputed
+    # from the loaded tables
     audit = spark.read.parquet(os.path.join(out1, "audit.parquet"))
     n_audit = audit.count()
-    n_ranges = sum(counts[f"{n}_ranges"] for n in (
-        "train_list", "booking_payment_detailed", "occupancy_list_hist"))
-    check(n_audit == n_ranges, f"audit rows {n_audit} != ranges {n_ranges}")
+    for report in schemas.LOAD:
+        table = spark.read.parquet(os.path.join(out1, f"{report}.parquet"))
+        want = sorted(
+            f"{r.range_start}..{r.range_end}"
+            for r in consecutive_date_ranges(table, schemas.LOAD[report][0]).collect()
+        )
+        got = sorted(r.period for r in audit.filter(F.col("table_name") == report).collect())
+        check(got == want, f"{report} audit periods {got} != {want}")
 
-    # S11 idempotency: re-run the whole orchestration; table state must
-    # be byte-identical (dynamic partition overwrite, same partitions)
-    states1 = {
-        n: table_state(spark, os.path.join(out1, f"{n}.parquet"))
-        for n in ("train_list", "booking_payment_detailed", "occupancy_list_hist")
-    }
-    walls2: dict[str, float] = {}
-    counts2: dict[str, int] = {}
-    run_once(spark, layout["src"], out1, walls2, counts2)
-    walls["rerun_total"] = walls2["run_total"]
-    print(f"{'rerun_total':42s} {walls2['run_total']:8.2f}s")
+    # S11 idempotency: re-run the whole program on a fresh copy of the
+    # inbox; table state must be byte-identical (dynamic partition
+    # overwrite, same partitions)
+    states1 = {n: table_state(spark, os.path.join(out1, f"{n}.parquet")) for n in schemas.LOAD}
+    summary2, _, walls["rerun_total"] = export(spark, layout, work, "inbox2", out1)
+    print(f"{'rerun_total':42s} {walls['rerun_total']:8.2f}s")
+    check(summary2.counts == counts, f"rerun counts {summary2.counts} != {counts}")
     for n, st1 in states1.items():
         st2 = table_state(spark, os.path.join(out1, f"{n}.parquet"))
         check(st1 == st2, f"{n} not idempotent: {st1} -> {st2}")

@@ -14,7 +14,6 @@ from train_reports_etl_spark.functions.datetime_fns import (
     day_abbrev,
     fmt_date,
     fmt_datetime_minutes,
-    fmt_time,
     iso_week,
     rebuild_timestamp,
     seconds_of_day,
@@ -34,7 +33,6 @@ __all__ = [
     "day_abbrev",
     "fmt_date",
     "fmt_datetime_minutes",
-    "fmt_time",
     "iso_week",
     "rebuild_timestamp",
     "seconds_of_day",

@@ -26,11 +26,6 @@ def fmt_date(col: Column | str) -> Column:
     return F.date_format(_c(col), "yyyy-MM-dd")
 
 
-def fmt_time(col: Column | str) -> Column:
-    """F3 — timestamp → ``HH:mm`` string (`:643`)."""
-    return F.date_format(_c(col), "HH:mm")
-
-
 def day_abbrev(col: Column | str) -> Column:
     """F4 — day-of-week abbreviation ``Mon``…``Sun``
     (`reports_exporter_v0.83.py:648`, ``strftime('%a')``).

@@ -49,13 +49,3 @@ def prune_columns(df: DataFrame, pattern: str = r"^Unnamed") -> DataFrame:
     rx = re.compile(pattern)
 
     return df.select(*[safe_col(c) for c in df.columns if not rx.search(c)])
-
-
-def require_non_empty(df: DataFrame, context: str = "report") -> DataFrame:
-    """P4 — abort if the frame is empty after cleaning
-    (`reports_exporter_v0.83.py:606-607`). ``isEmpty`` runs a LIMIT 1
-    job, not a full count.
-    """
-    if df.isEmpty():
-        raise ValueError(f"{context}: no rows survived cleaning")
-    return df

@@ -177,7 +177,9 @@ def train_list_pipeline(
 
 def bpd_pipeline(raw: DataFrame) -> ReportResult:
     """Booking Payment Detailed (`reports_exporter_v0.83.py:812-1067`):
-    coerce → VAT fold (F11) → required-null split → rename. No dedup
+    coerce → VAT fold (F11) → required-null split → rename, plus
+    ``op_date`` (the operation day, the table's partition column — the
+    reference deletes per operation day, `:1422-1434`). No dedup
     (`:1767-1768`)."""
     df = prune_columns(raw)
     df = _coerce(df, schemas.BPD_TIMESTAMP_COLS, schemas.BPD_MONEY_COLS)
@@ -203,7 +205,7 @@ def bpd_pipeline(raw: DataFrame) -> ReportResult:
             }
         ),
         schemas.BPD_RENAME,
-    )
+    ).withColumn("op_date", F.substring("operation_date_time", 1, 10))
     empty_dups = final.limit(0)
     return ReportResult(cleaned=final, error_rows=bad, duplicates=empty_dups)
 

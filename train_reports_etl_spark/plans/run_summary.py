@@ -46,6 +46,9 @@ class RunSummary:
 
     events: list[RunEvent] = field(default_factory=list)
     results: dict[str, ReportResult] = field(default_factory=dict)
+    #: Rows per report — ``in``, ``errors``, ``duplicates``, ``loaded``
+    #: — as observed on the export program's own writes.
+    counts: dict[str, dict[str, int]] = field(default_factory=dict)
 
     @property
     def errors_found(self) -> bool:
@@ -77,6 +80,7 @@ class RunSummary:
                 "n_events": len(self.events),
                 "n_failures": len(self.failures),
                 "events": [asdict(e) for e in self.events],
+                "counts": self.counts,
             },
             indent=2,
         )

@@ -193,3 +193,14 @@ HEADERS = {
     "booking_payment_detailed": BPD_HEADER,
     "occupancy_list_hist": OCCUPANCY_HEADER,
 }
+
+#: Load layout per report: (date column whose consecutive ranges the
+#: audit records, partition columns of the table). The partitions are
+#: the reference's delete keys (S11): train list by date, BPD by
+#: operation day (`:1422-1434`), occupancy by (date, data_date) so a
+#: re-run replaces only today's snapshot (`:1513-1528`).
+LOAD = {
+    "train_list": ("service_date", ["service_date"]),
+    "booking_payment_detailed": ("op_date", ["op_date"]),
+    "occupancy_list_hist": ("date", ["date", "data_date"]),
+}

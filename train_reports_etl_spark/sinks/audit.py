@@ -8,7 +8,7 @@ records a newer exporter version (`:243-283`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from train_reports_etl_spark.driver import local_frame
@@ -38,14 +38,14 @@ def append_audit(
     df.write.mode("append").parquet(path)
 
 
-def read_audit(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def check_version_gate(spark: SparkSession, path: str, my_version: float) -> None:
+def check_version_gate(spark: SparkSession, path: str, my_version: tuple[int, ...]) -> None:
     """S7 — abort when a newer engine version has already run
     (`reports_exporter_v0.83.py:243-283`): global MAX over the version
     control table, driver-side guard.
+
+    Versions are integer tuples stored as ``array<int>``, which Spark
+    orders element by element, so 0.10 is newer than 0.9 (as floats
+    it would be older).
 
     Only a *missing* table means "first run"; a corrupt or unreadable
     one re-raises — silently skipping the gate on read failure would
@@ -60,14 +60,17 @@ def check_version_gate(spark: SparkSession, path: str, my_version: float) -> Non
             return  # first run: no version table yet
         raise
     row = versions.agg(F.max("version").alias("v")).head()
-    if row and row.v is not None and float(row.v) > my_version:
+    if row and row.v is not None and tuple(row.v) > my_version:
+        newer = ".".join(map(str, row.v))
+        mine = ".".join(map(str, my_version))
         raise RuntimeError(
-            f"version gate: DB records v{row.v} > this engine v{my_version}; refusing to run"
+            f"version gate: DB records v{newer} > this engine v{mine}; refusing to run"
         )
 
 
-def record_version(spark: SparkSession, path: str, version: float) -> None:
-    df = local_frame(spark, [(version,)], "version double").withColumn(
+def record_version(spark: SparkSession, path: str, version: tuple[int, ...]) -> None:
+    """Append this engine's version to the version control table."""
+    df = local_frame(spark, [(list(version),)], "version array<int>").withColumn(
         "ts", F.current_timestamp()
     )
     df.write.mode("append").parquet(path)

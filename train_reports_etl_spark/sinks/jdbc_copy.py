@@ -1,5 +1,4 @@
-"""Relational-database sinks (S9): a psycopg2 COPY fast path with the
-reference's constraint drop/recreate lifecycle.
+"""Relational-database sink (S9): a psycopg2 COPY fast path.
 
 No database exists in this container, so everything here is
 connection-late: plans are built and validated, the socket is only
@@ -99,83 +98,3 @@ def copy_into_postgres(
     """
     cols = columns or df.columns
     df.select(*cols).foreachPartition(make_partition_loader(dsn, table, cols, connect))
-
-
-# Reference parity: `reports_exporter_v0.83.py:155` sets a 400k-row
-# threshold above which table constraints are dropped before the bulk
-# load and recreated after (`:1586-1623` remove/add via stored
-# procedures, `:1801-1835` the per-report orchestration).
-DEFAULT_CONSTRAINT_ROW_THRESHOLD = 400_000
-
-
-def constraint_sql_hooks(
-    dsn: str,
-    drop_sql: str,
-    recreate_sql: str,
-    connect=None,
-):
-    """Build (pre, post) callables running one SQL statement each on a
-    fresh driver-side connection (constraint DDL is a driver-side
-    concern — executors only stream COPY data).
-
-    The reference calls schema-owned stored procedures
-    (``SELECT schema.remove_constraints(...)`` /
-    ``SELECT schema.recreate_*_constraints()``,
-    `reports_exporter_v0.83.py:1590-1612`); pass those invocations —
-    or plain ``ALTER TABLE ... DROP/ADD CONSTRAINT`` — as the two SQL
-    strings. ``connect`` is injectable for tests.
-    """
-
-    def run(sql: str) -> None:
-        if connect is None:
-            import psycopg2  # noqa: PLC0415 — optional driver
-
-            conn = psycopg2.connect(dsn)
-        else:
-            conn = connect(dsn)
-        try:
-            with conn.cursor() as cur:
-                cur.execute(sql)
-            conn.commit()
-        finally:
-            conn.close()
-
-    return (lambda: run(drop_sql)), (lambda: run(recreate_sql))
-
-
-def bulk_load_with_constraint_hooks(
-    df: DataFrame,
-    dsn: str,
-    table: str,
-    *,
-    columns: list[str] | None = None,
-    pre_load=None,
-    post_load=None,
-    row_threshold: int = DEFAULT_CONSTRAINT_ROW_THRESHOLD,
-    row_count: int | None = None,
-    connect=None,
-) -> int:
-    """S9+ — COPY bulk load with the reference's constraint lifecycle:
-    above ``row_threshold`` rows, ``pre_load()`` (drop constraints)
-    runs before the distributed COPY and ``post_load()`` (recreate)
-    after it (`reports_exporter_v0.83.py:1801-1835`).
-
-    ``post_load`` is a ``finally`` — a failed load must not leave the
-    table constraint-less, matching the reference's intent (its
-    try/except logs and moves on; we recreate unconditionally).
-
-    ``row_count``: pass it when the caller already knows the size (e.g.
-    from an upstream aggregation) to skip the extra count job; at 100 TB
-    a ``df.count()`` is a cheap metadata-ish aggregate next to the load
-    itself, but never free. Returns the row count used for the decision.
-    """
-    n = df.count() if row_count is None else row_count
-    fire = n > row_threshold and pre_load is not None
-    if fire:
-        pre_load()
-    try:
-        copy_into_postgres(df, dsn, table, columns=columns, connect=connect)
-    finally:
-        if fire and post_load is not None:
-            post_load()
-    return n

@@ -116,8 +116,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Load several tables as a dict of lazy DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in names}

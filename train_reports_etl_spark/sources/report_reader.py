@@ -16,16 +16,16 @@ cluster); the scalable pattern used here is:
 - each sheet becomes an all-string DataFrame with the exact sniffed
   header, feeding the same pipeline as any other source.
 
-Engine selection: openpyxl when installed, else the pure-stdlib
-``xlsx_lite`` fallback (same public xlsx format), so the full
-discover→sniff→read path runs in any environment.
+Engine: the pure-stdlib ``xlsx_lite`` reader on both the driver
+(sheet listing, sniff, footer probe) and the executors (row tiers), so
+the full discover→sniff→read path needs no Excel library.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass
 from functools import partial
 
@@ -36,13 +36,6 @@ from train_reports_etl_spark.driver import local_frame
 from train_reports_etl_spark.operators.union import union_all
 from train_reports_etl_spark.sources import xlsx_lite
 from train_reports_etl_spark.sources.sniffer import PROBE_DEPTH, SniffResult, sniff_rows
-
-try:  # optional accelerated engine; absent in this container
-    import openpyxl  # noqa: F401
-
-    HAVE_OPENPYXL = True
-except ImportError:
-    HAVE_OPENPYXL = False
 
 # Reference parallel-read tuning constant
 # (`Old/reports_exporter_v0.82.ipynb:486`).
@@ -68,41 +61,6 @@ def discover_files(directory: str, pattern: str = ".xlsx") -> list[str]:
     )
 
 
-def _engine_rows(
-    path: str, sheet: str, min_row: int = 1, max_row: int | None = None
-) -> Iterator[list]:
-    """Yield raw cell rows for the 1-based inclusive range, via
-    whichever engine is available."""
-    if HAVE_OPENPYXL:
-        wb = openpyxl.load_workbook(path, read_only=True, data_only=True)
-        try:
-            yield from wb[sheet].iter_rows(min_row=min_row, max_row=max_row, values_only=True)
-        finally:
-            wb.close()
-    else:
-        yield from xlsx_lite.iter_rows(path, sheet, min_row=min_row, max_row=max_row)
-
-
-def _sheet_names(path: str) -> list[str]:
-    if HAVE_OPENPYXL:
-        wb = openpyxl.load_workbook(path, read_only=True)
-        try:
-            return list(wb.sheetnames)
-        finally:
-            wb.close()
-    return xlsx_lite.sheet_names(path)
-
-
-def _sheet_max_row(path: str, sheet: str) -> int:
-    if HAVE_OPENPYXL:
-        wb = openpyxl.load_workbook(path, read_only=True)
-        try:
-            return wb[sheet].max_row or 0
-        finally:
-            wb.close()
-    return xlsx_lite.sheet_max_row(path, sheet)
-
-
 def discover_reports(
     directory: str,
     on_error: Callable[[str, Exception], None] | None = None,
@@ -126,13 +84,13 @@ def discover_reports(
     found: dict[str, list[SheetRef]] = {}
     for path in discover_files(directory):
         try:
-            sheets = _sheet_names(path)
+            sheets = xlsx_lite.sheet_names(path)
         except Exception as exc:  # noqa: BLE001 — one bad workbook
             failed(path, exc)
             continue
         for sheet in sheets:
             try:
-                res = sniff_rows([list(r) for r in _engine_rows(path, sheet, 1, PROBE_DEPTH)])
+                res = sniff_rows([list(r) for r in xlsx_lite.iter_rows(path, sheet, 1, PROBE_DEPTH)])
             except Exception as exc:  # noqa: BLE001 — one bad sheet
                 failed(f"{path}#{sheet}", exc)
                 continue
@@ -159,7 +117,7 @@ def _read_task(task: tuple[str, str, int, int], width: int) -> list[list]:
     the header width."""
     path, sheet, lo, hi = task
     out = []
-    for row in _engine_rows(path, sheet, lo, hi):
+    for row in xlsx_lite.iter_rows(path, sheet, lo, hi):
         vals = [None if c is None else str(c) for c in row[:width]]
         vals.extend([None] * (width - len(vals)))
         out.append(vals)
@@ -191,7 +149,7 @@ def read_report(spark: SparkSession, refs: list[SheetRef]) -> DataFrame:
             for ref in group_refs
             for lo, hi in tier_plan(
                 ref.sniff.header_row + 2,  # 1-based, after the header
-                _sheet_max_row(ref.path, ref.sheet),
+                xlsx_lite.sheet_max_row(ref.path, ref.sheet),
                 parallelism,
             )
         ]

@@ -1,16 +1,14 @@
-"""Minimal pure-stdlib xlsx reader/writer (Excel fallback for S1/S3).
+"""Minimal pure-stdlib xlsx reader/writer (the Excel engine for S1/S3).
 
 An ``.xlsx`` file is a zip of XML parts (ECMA-376 / ISO 29500
 SpreadsheetML). This module implements just enough of that public
 format to (a) read sheet names + cell values and (b) write small test
 fixtures, using only ``zipfile`` + ``xml.etree`` — no openpyxl.
 
-Used as the fallback engine in ``report_reader`` when openpyxl is not
-installed (it is absent in this container), so the discover → sniff →
-read → pipeline path (`reports_exporter_v0.83.py:1684-1724,522-528`)
-has executed test coverage end-to-end. On a real cluster the
-``com.crealytics:spark-excel`` datasource replaces both engines behind
-the same interface.
+It is the only engine ``report_reader`` uses, for the discover → sniff
+→ read → pipeline path (`reports_exporter_v0.83.py:1684-1724,522-528`).
+On a real cluster the ``com.crealytics:spark-excel`` datasource could
+replace it behind the same interface.
 
 Supported on read: inline strings, shared strings, numbers, booleans,
 sparse cells (gaps reconstructed from the ``r`` cell reference), and
